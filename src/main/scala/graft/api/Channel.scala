@@ -25,6 +25,15 @@ import org.apache.spark.sql.functions._
   *     `MessageStore.metaInfos`.
   *   - `logOutput` (nodes.py:113): eager sampled show of the node output
   *     at wiring time (debug aid, like Nodes.Log).
+  *
+  * Wiring time is when `fn` runs: once per `Channel.run` on a batch or
+  * streaming input, and once per route on the per-message ingest edge (HTTP
+  * and MLLP endpoints, `push_msg`), whose plan is compiled on the first
+  * message and reused for every later one ([[MessageRunner]]). So `fn`
+  * must build its plan from the input's schema, not its rows: an eager
+  * peek (`logOutput`, Nodes.Log) shows that first message only. A node
+  * that runs Spark work over the rows while wiring (`df.rdd`, Nodes.Save,
+  * the file nodes) makes the route build its channel per message instead.
   */
 final case class Node(
     name: String,

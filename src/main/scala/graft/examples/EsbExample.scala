@@ -39,8 +39,10 @@ object EsbExample {
 
     val channel = Channel("orders")
       .add(Nodes.JsonToPython(orderSchema))
-      // validation: malformed JSON or non-positive qty is rejected
-      .rejectWhen(col("payload").isNull || col("payload.qty") <= 0)
+      // validation: malformed JSON or non-positive qty is rejected. Spark 4's
+      // from_json turns malformed input into a struct of nulls, not a null
+      // struct, so a missing qty is what marks it.
+      .rejectWhen(coalesce(col("payload.qty") <= 0, lit(true)))
       .add(
         // enrich: line total; flaky downstream guarded by auto-retry
         Node("enrich")(_.withColumn("meta",

@@ -1,11 +1,14 @@
 package graft.net
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import graft.api.Channel
+import graft.api.{Channel, MessageRunner}
 import graft.model.Msg
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import java.net.{InetSocketAddress, ServerSocket}
+import java.sql.Timestamp
+import scala.collection.immutable.ListMap
 import scala.collection.mutable.ArrayBuffer
 
 /** Real inbound protocol endpoints — the reference's socket servers
@@ -15,8 +18,13 @@ import scala.collection.mutable.ArrayBuffer
   *
   * Execution shape: an inbound request is ONE message — pypeman's ingest
   * edge, inherently driver-side and row-at-a-time — so the handler runs the
-  * channel synchronously on a one-row DataFrame and replies with the
-  * result, exactly like the reference's `handle_request`. Bulk reprocessing
+  * channel synchronously on a one-row relation and replies with the
+  * result, exactly like the reference's `handle_request`. The channel's
+  * plan is compiled once per route, on the route's first request (a
+  * [[graft.api.MessageRunner]]); every request then only swaps its own
+  * row into that plan, which Spark optimizes into a driver-side local scan
+  * (no Spark job). A compile that fails is retried on the next request, so
+  * each such request replies 503 with the error. Bulk reprocessing
   * of the same traffic is NOT done request-at-a-time: every request is also
   * appended to `requestLog`, a plain DataFrame that batch/streaming queries
   * scan with full parallelism (the 100 TB path for replaying an ingest
@@ -24,7 +32,14 @@ import scala.collection.mutable.ArrayBuffer
   */
 final class HttpEndpoint(spark: SparkSession, host: String = "127.0.0.1", port: Int = 0) {
 
-  private val server = HttpServer.create(new InetSocketAddress(host, port), 0)
+  private val server = {
+    // The JDK server writes a reply's headers and body as separate packets;
+    // with Nagle's algorithm on, the body over a kept-alive connection waits
+    // for the client's delayed ACK (~40 ms). The server reads this property
+    // once, at the JVM's first HttpServer.create; a user's setting wins.
+    System.getProperties.putIfAbsent("sun.net.httpserver.nodelay", "true")
+    HttpServer.create(new InetSocketAddress(host, port), 0)
+  }
   private val log = ArrayBuffer.empty[(Long, String, String, String)]
 
   def actualPort: Int = server.getAddress.getPort
@@ -39,7 +54,21 @@ final class HttpEndpoint(spark: SparkSession, host: String = "127.0.0.1", port: 
       path: String,
       channel: Channel,
       method: String = "*",
-      addHeaders: Boolean = false): Unit =
+      addHeaders: Boolean = false): Unit = {
+    // driver-side collect is CORRECT here, not a scale smell: the relation
+    // is bounded by this one request's message (a channel maps 1→0/1 rows
+    // unless a Yielder fans out — and then the response is still one
+    // request's fan-out, not corpus-sized). Bulk ingest does NOT route
+    // through this endpoint; it lands via FileWatcher/readStream. If a
+    // pipeline ever yields unboundedly, cap the damage at the driver with
+    // limit().
+    //
+    // payload may have become a struct mid-pipeline; the reference str()s
+    // non-string payloads into the response body the same way
+    val runner = new MessageRunner(spark, channel, MessageRunner.msgSchema)(
+      _.select(col("payload").cast("string"),
+        coalesce(element_at(col("meta"), "status"),
+          element_at(col("meta"), "status_code"), lit("200")).as("status")))
     server.createContext(path, (ex: HttpExchange) => {
       val body = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
       val m = ex.getRequestMethod.toUpperCase
@@ -50,24 +79,11 @@ final class HttpEndpoint(spark: SparkSession, host: String = "127.0.0.1", port: 
         val tsMs = System.currentTimeMillis()
         synchronized { log += ((tsMs, m, uri.toString, body)) }
         try {
-          val result = channel.run(oneMsg(body, m, uri.toString,
-            Option(uri.getQuery).getOrElse(""),
-            if (addHeaders) headerMap(ex) else Map.empty, tsMs))
-          val rows = result.main
-            // driver-side collect is CORRECT here, not a scale smell: the
-            // relation is bounded by this one request's message (a channel
-            // maps 1→0/1 rows unless a Yielder fans out — and then the
-            // response is still one request's fan-out, not corpus-sized).
-            // Bulk ingest does NOT route through this endpoint; it lands
-            // via FileWatcher/readStream. If a pipeline ever yields
-            // unboundedly, cap the damage at the driver with limit().
-            //
-            // payload may have become a struct mid-pipeline; the reference
-            // str()s non-string payloads into the response body the same way
-            .select(col("payload").cast("string"),
-              coalesce(element_at(col("meta"), "status"),
-                element_at(col("meta"), "status_code"), lit("200")).as("status"))
-            .collect()
+          val meta = ListMap((Map("method" -> m, "url" -> uri.toString,
+            "get_params" -> Option(uri.getQuery).getOrElse(""))
+            ++ (if (addHeaders) headerMap(ex) else Map.empty)).toSeq.sortBy(_._1): _*)
+          val rows = runner.run(MessageRunner.msg(body, MessageRunner.md5Hex(s"$body|$tsMs"),
+            new Timestamp(tsMs), "http_request", meta))
           if (rows.isEmpty) respond(ex, 200, "Dropped")
           else respond(ex, rows.head.getString(1).toInt,
             Option(rows.head.getString(0)).getOrElse(""))
@@ -76,6 +92,7 @@ final class HttpEndpoint(spark: SparkSession, host: String = "127.0.0.1", port: 
         }
       }
     })
+  }
 
   /** Mount a raw request-body → response-body handler on a route — the
     * remote-admin JSON-RPC mount point (the reference mounts its dispatcher
@@ -93,22 +110,6 @@ final class HttpEndpoint(spark: SparkSession, host: String = "127.0.0.1", port: 
     ex.getRequestHeaders.asScala.map { case (k, vs) =>
       ("header_" + k) -> vs.asScala.mkString(",")
     }.toMap
-  }
-
-  private def oneMsg(
-      body: String, method: String, url: String, query: String,
-      headers: Map[String, String], tsMs: Long): DataFrame = {
-    import spark.implicits._
-    val metaPairs = (Map("method" -> method, "url" -> url, "get_params" -> query)
-      ++ headers).toSeq.sortBy(_._1)
-    Seq(body).toDF("payload")
-      .withColumn("uuid", md5(concat_ws("|", col("payload"), lit(tsMs.toString))))
-      .withColumn("ts", timestamp_millis(lit(tsMs)))
-      .withColumn("content_type", lit("http_request"))
-      .withColumn("meta",
-        map(metaPairs.flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*))
-      .withColumn("state", lit(Msg.PENDING))
-      .withColumn("ctx", map().cast(Msg.ctxType))
   }
 
   private def respond(ex: HttpExchange, status: Int, body: String): Unit = {
@@ -131,11 +132,12 @@ final class HttpEndpoint(spark: SparkSession, host: String = "127.0.0.1", port: 
 
 /** MLLP endpoint (contrib/hl7.py MLLPChannel): a TCP server speaking the
   * HL7 Minimal Lower Layer Protocol — frames are 0x0B payload 0x1C 0x0D.
-  * Each framed message runs the channel synchronously (one-row ingest, as
-  * above); the reply is the channel result's payload (normally an ACK built
-  * with Codecs.mllpAck), re-framed. One connection served at a time in a
-  * daemon accept loop — the reference's asyncio server is likewise
-  * single-threaded; bulk traffic goes through the log, not the socket. */
+  * Each framed message runs the channel synchronously (one-row ingest,
+  * compiled once, as above); the reply is the channel result's payload
+  * (normally an ACK built with Codecs.mllpAck), re-framed. One connection
+  * served at a time in a daemon accept loop — the reference's asyncio
+  * server is likewise single-threaded; bulk traffic goes through the log,
+  * not the socket. */
 final class MllpEndpoint(spark: SparkSession, channel: Channel, host: String = "127.0.0.1", port: Int = 0) {
   private val server = new ServerSocket()
   server.bind(new InetSocketAddress(host, port))
@@ -179,14 +181,15 @@ final class MllpEndpoint(spark: SparkSession, channel: Channel, host: String = "
     t.start()
   }
 
+  // bounded collect: one MLLP frame in → ≤1 ACK payload out (see the
+  // HTTP handler's size-guard note; the same per-request bound applies)
+  private val runner = new MessageRunner(spark, channel, StructType(Seq(
+    StructField("payload", StringType),
+    StructField("meta", MapType(StringType, StringType)),
+    StructField("ctx", Msg.ctxType))))(_.select("payload"))
+
   private def handleOne(hl7: String): String = {
-    import spark.implicits._
-    val df = Seq(hl7).toDF("payload")
-      .withColumn("meta", map().cast("map<string,string>"))
-      .withColumn("ctx", map().cast(Msg.ctxType))
-    // bounded collect: one MLLP frame in → ≤1 ACK payload out (see the
-    // HTTP handler's size-guard note; the same per-request bound applies)
-    val rows = channel.runMain(df).select("payload").collect()
+    val rows = runner.run(Row(hl7, Map.empty, Map.empty))
     if (rows.isEmpty) "" else String.valueOf(rows.head.getString(0))
   }
 

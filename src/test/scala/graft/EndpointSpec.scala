@@ -59,27 +59,161 @@ class EndpointSpec extends SparkSpec {
     } finally ep.stop()
   }
 
+  private def httpSend(url: String, body: String, headers: Map[String, String] = Map.empty) = {
+    val resp = JdkHttpTransport.send(
+      HttpRequest("POST", url, headers = headers, body = Some(body)))
+    (resp.status, resp.body)
+  }
+
+  test("compiled route: the channel is built once, not per request") {
+    val calls = new java.util.concurrent.atomic.AtomicInteger()
+    val ep = new HttpEndpoint(spark)
+    ep.addChannel("/up", Channel("up").add(Node("count") { df =>
+      calls.incrementAndGet()
+      df.withColumn("payload", upper(col("payload")))
+    }))
+    ep.start()
+    try {
+      assert(calls.get == 0) // wiring does not compile
+      val replies = (1 to 20).map(i => httpPost(ep.url("/up"), s"msg $i"))
+      assert(replies == (1 to 20).map(i => (200, s"MSG $i")))
+      assert(calls.get == 1)
+    } finally ep.stop()
+  }
+
+  test("compiled route: each request gets its own body, query, headers and meta order, also after a 503") {
+    val ep = new HttpEndpoint(spark)
+    val echo = Channel("echo").add(Node("echo")(_.withColumn("payload",
+      when(col("payload") === "boom", raise_error(lit("kaput")).cast("string"))
+        .otherwise(concat_ws(" ", col("payload"), element_at(col("meta"), "get_params"),
+          coalesce(element_at(col("meta"), "header_X-tag"), lit("-")),
+          array_join(map_keys(col("meta")), ","))))))
+    ep.addChannel("/h", echo, addHeaders = true)
+    ep.addChannel("/plain", echo)
+    ep.start()
+    try {
+      val replies = Seq("a", "boom", "b", "c").map(b =>
+        httpSend(ep.url(s"/h?q=$b"), b, Map("X-tag" -> s"t-$b")))
+      assert(replies(0)._1 == 200 && replies(0)._2.startsWith("a q=a t-a "))
+      assert(replies(1)._1 == 503 && replies(1)._2.contains("kaput"))
+      assert(replies(2)._1 == 200 && replies(2)._2.startsWith("b q=b t-b "))
+      assert(replies(3)._1 == 200 && replies(3)._2.startsWith("c q=c t-c "))
+      // meta keys are sorted: method, url, get_params and header_* entries
+      val keys = replies(0)._2.split(" ").last.split(",").toSeq
+      assert(keys == keys.sorted && keys.contains("header_X-tag"))
+      assert(httpSend(ep.url("/plain?z=1"), "p") == ((200, "p z=1 - get_params,method,url")))
+      assert(httpSend(ep.url("/plain"), "boom")._1 == 503)
+      assert(httpSend(ep.url("/plain?z=2"), "r") == ((200, "r z=2 - get_params,method,url")))
+    } finally ep.stop()
+  }
+
+  test("compiled route: a self-join and a union of the message both see the current request") {
+    val ep = new HttpEndpoint(spark)
+    ep.addChannel("/self", Channel("self").add(Node("selfJoin") { df =>
+      val up = df.select(col("uuid"), upper(col("payload")).as("up"))
+      df.join(up, "uuid")
+        .withColumn("payload", concat(col("payload"), lit("/"), col("up"))).drop("up")
+    }))
+    ep.addChannel("/union", Channel("union").add(Node("union") { df =>
+      df.unionByName(df.withColumn("payload", upper(col("payload"))))
+        .agg(concat_ws("+", sort_array(collect_list(col("payload")))).as("payload"),
+          first(col("meta")).as("meta"))
+    }))
+    ep.start()
+    try {
+      for (b <- Seq("ab", "cd", "ef")) {
+        assert(httpPost(ep.url("/self"), b) == ((200, s"$b/${b.toUpperCase}")))
+        assert(httpPost(ep.url("/union"), b) == ((200, s"${b.toUpperCase}+$b")))
+      }
+    } finally ep.stop()
+  }
+
+  test("compiled route: a static lookup table joined in a node is kept") {
+    val lookup = Seq(("a", "apple"), ("b", "banana")).toDF("k", "v")
+    val ep = new HttpEndpoint(spark)
+    ep.addChannel("/fruit", Channel("fruit").add(Node("lookup") { df =>
+      df.join(lookup, df("payload") === lookup("k"), "left")
+        .withColumn("payload", coalesce(col("v"), lit("?"))).drop("k", "v")
+    }))
+    ep.start()
+    try {
+      assert(Seq("a", "b", "c", "a").map(b => httpPost(ep.url("/fruit"), b)._2)
+        == Seq("apple", "banana", "?", "apple"))
+    } finally ep.stop()
+  }
+
+  test("compiled route: a node that writes the message while wiring (Nodes.Save) runs per request") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ep_save").toString
+    val store = new graft.store.MessageStore(spark, s"$dir/msgs")
+    val ep = new HttpEndpoint(spark)
+    ep.addChannel("/save", Channel("save").add(graft.api.Nodes.Save(store)))
+    ep.start()
+    try {
+      assert(Seq("s1", "s2", "s3").map(b => httpPost(ep.url("/save"), b))
+        == Seq("s1", "s2", "s3").map(b => (200, b)))
+      assert(store.all().select("payload").as[String].collect().sorted.toSeq
+        == Seq("s1", "s2", "s3"))
+    } finally ep.stop()
+  }
+
+  test("compiled route: rand() is drawn afresh per request") {
+    val ep = new HttpEndpoint(spark)
+    ep.addChannel("/rand", Channel("rand").add(Node("rand")(
+      _.withColumn("payload", rand().cast("string")))))
+    ep.start()
+    try {
+      val draws = (1 to 3).map(_ => httpPost(ep.url("/rand"), "x"))
+      assert(draws.forall(_._1 == 200))
+      assert(draws.map(_._2).distinct.size == 3)
+    } finally ep.stop()
+  }
+
+  test("compiled route: a channel that fails analysis replies 503 on every request") {
+    val calls = new java.util.concurrent.atomic.AtomicInteger()
+    val ep = new HttpEndpoint(spark)
+    ep.addChannel("/bad", Channel("bad").add(Node("bad") { df =>
+      calls.incrementAndGet()
+      df.withColumn("payload", col("no_such_column"))
+    }))
+    ep.start()
+    try {
+      for (_ <- 1 to 3) {
+        val (st, body) = httpPost(ep.url("/bad"), "x")
+        assert(st == 503 && body.contains("no_such_column"))
+      }
+      assert(calls.get == 3) // a failed compile is not kept
+    } finally ep.stop()
+  }
+
   test("MLLP endpoint: framed HL7 in, channel ACK out (contrib/hl7.py)") {
+    val calls = new java.util.concurrent.atomic.AtomicInteger()
     val ack = Channel("ack").add(
-      Node("ack")(_.withColumn("payload", Codecs.hl7Ack(col("payload"), "AA"))))
+      Node("ack") { df =>
+        calls.incrementAndGet()
+        df.withColumn("payload", Codecs.hl7Ack(col("payload"), "AA"))
+      })
     val ep = new MllpEndpoint(spark, ack)
     ep.start()
     try {
       val sock = new Socket("127.0.0.1", ep.actualPort)
       try {
         val out = sock.getOutputStream
-        val msg = "MSH|^~\\&|APP|FAC|||20240101||ADT^A01|MSG007|P|2.5"
-        out.write(0x0b); out.write(msg.getBytes("UTF-8"))
-        out.write(0x1c); out.write(0x0d); out.flush()
         val in = sock.getInputStream
-        val buf = new StringBuilder
-        var b = in.read()
-        assert(b == 0x0b)
-        b = in.read()
-        while (b != 0x1c && b != -1) { buf.append(b.toChar); b = in.read() }
-        val reply = buf.toString
-        assert(reply.startsWith("MSH|"))
-        assert(reply.contains("MSA|AA|MSG007"))
+        for (id <- Seq("MSG007", "MSG008")) {
+          val msg = s"MSH|^~\\&|APP|FAC|||20240101||ADT^A01|$id|P|2.5"
+          out.write(0x0b); out.write(msg.getBytes("UTF-8"))
+          out.write(0x1c); out.write(0x0d); out.flush()
+          val buf = new StringBuilder
+          var b = in.read()
+          assert(b == 0x0b)
+          b = in.read()
+          while (b != 0x1c && b != -1) { buf.append(b.toChar); b = in.read() }
+          assert(in.read() == 0x0d)
+          val reply = buf.toString
+          assert(reply.startsWith("MSH|"))
+          assert(reply.contains(s"MSA|AA|$id"))
+        }
+        assert(calls.get == 1) // compiled once for both frames
       } finally sock.close()
     } finally ep.stop()
   }

@@ -66,4 +66,27 @@ class EsbExampleSpec extends SparkSpec {
       """{"jsonrpc":"2.0","method":"list_msgs","params":["orders",0,10,"timestamp",null,null,null,null,null],"id":1}""")
     assert(resp.contains(""""total":4"""))
   }
+
+  test("a truncated JSON order is rejected: Dropped over HTTP, stored rejected in batch") {
+    val dir = Files.createTempDirectory("graft_esb_malformed").toString
+    val w = EsbExample.build(spark, dir)
+    val cut = """{"order_id":7,"sku":"""
+    w.endpoint.start()
+    try {
+      val resp = JdkHttpTransport.send(Req("POST", w.endpoint.url("/orders"), body = Some(cut)))
+      assert(resp.status == 200 && resp.body == "Dropped")
+    } finally w.endpoint.stop()
+    val requests = Seq(cut, """{"order_id":8,"sku":"A","qty":2}""").toDF("payload")
+      .withColumn("uuid", md5(col("payload")))
+      .withColumn("ts", lit("2024-01-01 10:00:00").cast("timestamp"))
+      .withColumn("content_type", lit("http_request"))
+      .withColumn("meta", map().cast("map<string,string>"))
+      .withColumn("state", lit(Msg.PENDING))
+      .withColumn("ctx", map().cast(Msg.ctxType))
+      .withColumn("attempt", lit(0L))
+    val states = EsbExample.runBatch(w, requests).select("uuid", "state")
+      .as[(String, String)].collect().toMap
+    val ids = requests.select("uuid").as[String].collect()
+    assert(states == Map(ids(0) -> Msg.REJECTED, ids(1) -> Msg.PROCESSED))
+  }
 }
