@@ -28,12 +28,15 @@ import org.apache.spark.sql.functions._
   *
   * Wiring time is when `fn` runs: once per `Channel.run` on a batch or
   * streaming input, and once per route on the per-message ingest edge (HTTP
-  * and MLLP endpoints, `push_msg`), whose plan is compiled on the first
-  * message and reused for every later one ([[MessageRunner]]). So `fn`
-  * must build its plan from the input's schema, not its rows: an eager
-  * peek (`logOutput`, Nodes.Log) shows that first message only. A node
-  * that runs Spark work over the rows while wiring (`df.rdd`, Nodes.Save,
-  * the file nodes) makes the route build its channel per message instead.
+  * and MLLP endpoints), whose plan is compiled on the first message and
+  * reused for every later one ([[MessageRunner]]). So `fn` must build its
+  * plan from the input's schema, not its rows, and not from driver state
+  * that changes between messages (a Scala `var`, the clock). A node that
+  * does look at data while wiring — runs a Spark action (`df.first()`,
+  * `df.isEmpty`, the eager show of `logOutput` and Nodes.Log), creates an
+  * RDD (`df.rdd`), writes (Nodes.Save, the file nodes), or reads a table,
+  * files or a view — makes the route build its channel per message instead,
+  * so it sees each message and the data's current state.
   */
 final case class Node(
     name: String,

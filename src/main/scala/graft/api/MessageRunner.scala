@@ -4,7 +4,7 @@ import graft.model.Msg
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.ExpressionWithRandomSeed
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation, LogicalPlan, OneRowRelation, Range, Sample, View}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
@@ -12,7 +12,8 @@ import java.util.concurrent.ThreadLocalRandom
 
 /** A channel compiled once for one-message runs — the ingest edge where
   * every request is ONE message (pypeman's `handle_request`): the HTTP and
-  * MLLP endpoints and the admin's `push_msg`.
+  * MLLP endpoints, which keep one runner per route, and the admin's
+  * `push_msg`, which builds one per call.
   *
   * The first run builds `reply(channel.run(template).main)` over a one-row
   * `LocalRelation` holding that run's message (the template) and keeps the
@@ -25,56 +26,79 @@ import java.util.concurrent.ThreadLocalRandom
   * scan: a request launches no Spark job.
   *
   * Consequences for the channel (see [[Node]]): a node function must build
-  * its plan from the input's schema, not its rows; wiring-time effects
-  * (`Nodes.Log`, `logOutput`) fire once, at the compile; every random
-  * expression (`rand()`, `uuid()`, ...) gets a new seed per run, as a
-  * freshly built plan would. Spark's `rand()` carries a literal seed too,
-  * so a fixed one (`rand(42)`) is re-drawn as well.
+  * its plan from the input's schema, not its rows, and must not bake in
+  * driver-side state that changes between messages (a Scala `var`, the
+  * clock). Every random expression (`rand()`, `uuid()`, ...) and every
+  * `sample` gets a new seed per run, as a freshly built plan would. Spark's
+  * `rand()` carries a literal seed, so a fixed one (`rand(42)`) cannot be
+  * told apart and is re-drawn as well.
   *
-  * A compile is not kept when it fails (the next run compiles again and
-  * fails the same way) or when a node function ran Spark work over the
-  * message's rows (`df.rdd`, Nodes.Save): such a channel is built per
-  * message, as a batch run would build it.
+  * A compile is kept only when the plan stays valid for later messages.
+  * It is not kept, and the next message builds its own, when
+  *   - it failed (the next run compiles again and fails the same way);
+  *   - a node function ran a Spark action or created an RDD while wiring
+  *     (`df.first()`, `df.collect()`, `df.rdd`, the eager show of
+  *     `Nodes.Log` and `logOutput`, Nodes.Save, the file nodes): it has
+  *     read or written this message's rows, or read data that may change;
+  *   - the plan reads anything but local relations (a table, files, a
+  *     view), whose contents or file listing may change between requests.
+  * A kept compile is also dropped when the session's SQL conf changes
+  * (time zone, ANSI mode, ...), since analysis bakes those into the plan.
   */
-final class MessageRunner(spark: SparkSession, val channel: Channel, schema: StructType)(
+final class MessageRunner(spark: SparkSession, channel: Channel, schema: StructType)(
     reply: DataFrame => DataFrame) {
+  import MessageRunner._
 
   private val attrs = DataTypeUtils.toAttributes(schema)
-  /** The analyzed plan and the template's data, once a compile succeeded. */
-  private var compiled: Option[(LogicalPlan, Seq[InternalRow])] = None
+  private var compiled: Option[Compiled] = None
 
   /** Run the channel on one message whose values follow `schema`; returns
     * the reply's rows. */
   def run(msg: Row): Array[Row] = {
     val data = LocalRelation.fromExternalRows(attrs, Seq(msg)).data
-    val (plan, template) = compile(data)
-    val bound = plan
+    val c = compile(data)
+    val bound = c.plan
       .transformUpWithSubqueries {
-        case l: LocalRelation if l.data eq template => l.copy(data = data)
+        case l: LocalRelation if l.data eq c.template => l.copy(data = data)
+        case s: Sample => s.copy(seed = nextSeed())
       }
       .transformAllExpressionsWithSubqueries {
-        case e: ExpressionWithRandomSeed => e.withNewSeed(ThreadLocalRandom.current().nextLong())
+        case e: ExpressionWithRandomSeed => e.withNewSeed(nextSeed())
       }
     ColumnBridge.ofRows(spark, bound).collect()
   }
 
-  private def compile(data: Seq[InternalRow]): (LogicalPlan, Seq[InternalRow]) = synchronized {
-    compiled.getOrElse {
-      val sc = spark.sparkContext
-      val rddsBefore = sc.emptyRDD[Unit].id
+  private def compile(data: Seq[InternalRow]): Compiled = synchronized {
+    val conf = spark.conf.getAll
+    compiled.filter(_.conf == conf).getOrElse {
       val in = ColumnBridge.ofRows(spark, LocalRelation(attrs, data))
-      val c = (reply(channel.run(in).main).queryExecution.analyzed, data)
-      // Analysis creates no RDD. A node that did read or write this
-      // message's rows while wiring (`df.rdd`, Nodes.Save, FileWriter) has
-      // bound its plan or its effect to this message, so such a plan is not
-      // kept and every message builds its own.
-      if (sc.emptyRDD[Unit].id == rddsBefore + 1) compiled = Some(c)
+      val (plan, worked) = ColumnBridge.withWorkCheck(spark)(
+        reply(channel.run(in).main).queryExecution.analyzed)
+      // Analysis runs no action and creates no RDD, so work seen here came
+      // from a node function (see the class doc) or another thread.
+      val c = Compiled(plan, data, conf)
+      compiled = if (worked || !selfContained(plan)) None else Some(c)
       c
     }
   }
 }
 
 object MessageRunner {
+
+  /** An analyzed channel plan, the template data it was built over, and the
+    * session conf it was analyzed under. */
+  private final case class Compiled(
+      plan: LogicalPlan, template: Seq[InternalRow], conf: Map[String, String])
+
+  private def nextSeed(): Long = ThreadLocalRandom.current().nextLong()
+
+  /** Whether a plan reads only local relations (the message, or data a node
+    * built from constants) and one-row or range relations, through no view. */
+  private def selfContained(plan: LogicalPlan): Boolean =
+    plan.collectWithSubqueries {
+      case _: LocalRelation | _: OneRowRelation | _: Range => true
+      case _: LeafNode | _: View => false
+    }.forall(identity)
 
   /** One inbound message as the HTTP endpoint and `push_msg` feed it to a
     * channel: the [[Msg]] columns, payload first. */

@@ -91,8 +91,8 @@ object Nodes {
   def FuncNode(name: String)(f: Column => Column): Node = CoreOps.mapPayload(name)(f)
   def MsgFuncNode(name: String)(f: DataFrame => DataFrame): Node = Node(name)(f)
 
-  /** nodes.py:430 Log — sampled peek (eager show at wiring time, so once per
-    * route on an endpoint; debug aid, keep out of production pipelines). */
+  /** nodes.py:430 Log — sampled peek (eager show at wiring time; debug aid,
+    * keep out of production pipelines). */
   def Log(n: Int = 5): Node = Node("Log")(df => { df.show(n, 80); df })
 
   /** nodes.py:457 Sleep — batch no-op kept for API parity. */

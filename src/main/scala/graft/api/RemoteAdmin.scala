@@ -31,9 +31,6 @@ final class RemoteAdmin(spark: SparkSession) {
   private var stores = Map.empty[String, MessageStore]
   /** channel name → status string (BaseChannel.STATE_NAMES). */
   private var status = Map.empty[String, String].withDefaultValue("STOPPED")
-  /** channel name → its compiled `push_msg` runner; replaced when the
-    * registry holds another channel under that name. */
-  private var pushRunners = Map.empty[String, MessageRunner]
 
   def bind(channelName: String, store: MessageStore): Unit =
     synchronized { stores += channelName -> store }
@@ -107,16 +104,9 @@ final class RemoteAdmin(spark: SparkSession) {
     try {
       val ch = Channels.get(channel)
         .getOrElse(throw new NoSuchElementException(s"no channel $channel"))
-      val runner = synchronized {
-        pushRunners.get(channel).filter(_.channel eq ch).getOrElse {
-          val r = new MessageRunner(spark, ch, MessageRunner.msgSchema)(identity)
-          pushRunners += channel -> r
-          r
-        }
-      }
       val msg = MessageRunner.msg(text, MessageRunner.md5Hex(text),
         java.sql.Timestamp.from(java.time.Instant.now()), "application/text", Map.empty)
-      rowToDict(runner.run(msg).head)
+      rowToDict(new MessageRunner(spark, ch, MessageRunner.msgSchema)(identity).run(msg).head)
     } catch {
       case e: Exception => toJava(linked("error" -> e.getMessage))
     }

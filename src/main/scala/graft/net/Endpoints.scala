@@ -24,19 +24,27 @@ import scala.collection.mutable.ArrayBuffer
   * [[graft.api.MessageRunner]]); every request then only swaps its own
   * row into that plan, which Spark optimizes into a driver-side local scan
   * (no Spark job). A compile that fails is retried on the next request, so
-  * each such request replies 503 with the error. Bulk reprocessing
-  * of the same traffic is NOT done request-at-a-time: every request is also
-  * appended to `requestLog`, a plain DataFrame that batch/streaming queries
-  * scan with full parallelism (the 100 TB path for replaying an ingest
-  * log).
+  * each such request replies 503 with the error; a channel that looks at
+  * data while wiring is built per request (see [[graft.api.Node]]). Bulk
+  * reprocessing of the same traffic is NOT done request-at-a-time: every
+  * request is also appended to `requestLog`, a plain DataFrame that
+  * batch/streaming queries scan with full parallelism (the 100 TB path for
+  * replaying an ingest log).
+  *
+  * Replies over a kept-alive connection need TCP_NODELAY: the JDK server
+  * writes a reply's headers and body as separate packets, and with Nagle's
+  * algorithm on the body waits for the client's delayed ACK (~40 ms). So
+  * constructing an endpoint sets the system property
+  * `sun.net.httpserver.nodelay=true` unless it is already set. The property
+  * is JVM-wide and the JDK reads it once, at the JVM's first
+  * `HttpServer.create`: it then holds for every JDK server in the process,
+  * and has no effect if another component created one before.
   */
 final class HttpEndpoint(spark: SparkSession, host: String = "127.0.0.1", port: Int = 0) {
 
   private val server = {
-    // The JDK server writes a reply's headers and body as separate packets;
-    // with Nagle's algorithm on, the body over a kept-alive connection waits
-    // for the client's delayed ACK (~40 ms). The server reads this property
-    // once, at the JVM's first HttpServer.create; a user's setting wins.
+    // TCP_NODELAY for kept-alive replies (see the class doc); a user's
+    // setting wins.
     System.getProperties.putIfAbsent("sun.net.httpserver.nodelay", "true")
     HttpServer.create(new InetSocketAddress(host, port), 0)
   }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, ExpressionUtils, SparkSession => ClassicSparkSession}
+import org.apache.spark.sql.execution.SQLExecution
+import java.util.concurrent.atomic.AtomicLong
 
 /** Bridge to the `private[sql]` Column↔Expression converters — the standard
   * pattern for libraries that define custom Catalyst expressions (a file in
@@ -17,4 +19,22 @@ object ColumnBridge {
     * their own plan nodes, e.g. the native as-of join). */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     ClassicDataset.ofRows(spark.asInstanceOf[ClassicSparkSession], plan)
+
+  /** Run `body` and tell whether Spark work happened meanwhile: an RDD was
+    * created or a SQL execution (any Dataset action or write) started. Work
+    * on other threads counts too. */
+  def withWorkCheck[T](spark: SparkSession)(body: => T): (T, Boolean) = {
+    val sc = spark.sparkContext
+    val rdd0 = sc.newRddId()
+    val exec0 = executionIds.get()
+    val out = body
+    (out, sc.newRddId() != rdd0 + 1 || executionIds.get() != exec0)
+  }
+
+  /** SQLExecution's id counter: every execution draws the next id. */
+  private lazy val executionIds: AtomicLong = {
+    val f = SQLExecution.getClass.getDeclaredField("_nextExecutionId")
+    f.setAccessible(true)
+    f.get(SQLExecution).asInstanceOf[AtomicLong]
+  }
 }

@@ -168,6 +168,62 @@ class EndpointSpec extends SparkSpec {
     } finally ep.stop()
   }
 
+  test("compiled route: a node that samples the message draws afresh per request") {
+    val ep = new HttpEndpoint(spark)
+    ep.addChannel("/sample", Channel("sample").add(Node("sample")(_.sample(0.5))))
+    ep.start()
+    try {
+      val replies = (1 to 20).map(_ => httpPost(ep.url("/sample"), "x"))
+      assert(replies.toSet == Set((200, "x"), (200, "Dropped")))
+    } finally ep.stop()
+  }
+
+  test("compiled route: a node that reads the message's rows while wiring (first()) runs per request") {
+    val calls = new java.util.concurrent.atomic.AtomicInteger()
+    val ep = new HttpEndpoint(spark)
+    ep.addChannel("/peek", Channel("peek").add(Node("peek") { df =>
+      calls.incrementAndGet()
+      df.withColumn("payload", lit(df.first().getString(0).reverse))
+    }))
+    ep.start()
+    try {
+      assert(Seq("abc", "xyz", "pq").map(b => httpPost(ep.url("/peek"), b))
+        == Seq((200, "cba"), (200, "zyx"), (200, "qp")))
+      assert(calls.get == 3)
+    } finally ep.stop()
+  }
+
+  test("compiled route: a node that reads files sees files added between requests") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ep_files").toString
+    Seq("a").toDF("k").write.mode("append").parquet(dir)
+    val ep = new HttpEndpoint(spark)
+    ep.addChannel("/files", Channel("files").add(Node("count") { df =>
+      val n = spark.read.schema("k string").parquet(dir).agg(count(lit(1)).as("n"))
+      df.crossJoin(n).withColumn("payload", col("n").cast("string")).drop("n")
+    }))
+    ep.start()
+    try {
+      assert(httpPost(ep.url("/files"), "x") == ((200, "1")))
+      Seq("b").toDF("k").write.mode("append").parquet(dir)
+      assert(httpPost(ep.url("/files"), "x") == ((200, "2")))
+    } finally ep.stop()
+  }
+
+  test("compiled route: a session conf change between requests recompiles the route") {
+    val key = "spark.sql.session.timeZone"
+    val zone = spark.conf.get(key)
+    val ep = new HttpEndpoint(spark)
+    ep.addChannel("/tz", Channel("tz").add(Node("tz")(
+      _.withColumn("payload", date_format(col("ts"), "XXX")))))
+    ep.start()
+    try {
+      spark.conf.set(key, "UTC")
+      assert(httpPost(ep.url("/tz"), "x") == ((200, "Z")))
+      spark.conf.set(key, "Asia/Kolkata")
+      assert(httpPost(ep.url("/tz"), "x") == ((200, "+05:30")))
+    } finally { spark.conf.set(key, zone); ep.stop() }
+  }
+
   test("compiled route: a channel that fails analysis replies 503 on every request") {
     val calls = new java.util.concurrent.atomic.AtomicInteger()
     val ep = new HttpEndpoint(spark)
@@ -183,6 +239,42 @@ class EndpointSpec extends SparkSpec {
       }
       assert(calls.get == 3) // a failed compile is not kept
     } finally ep.stop()
+  }
+
+  test("HttpEndpoint: replies over one kept-alive connection do not wait for a delayed ACK") {
+    val ep = new HttpEndpoint(spark)
+    ep.addHandler("/echo")(identity)
+    ep.start()
+    val sock = new Socket("127.0.0.1", ep.actualPort)
+    try {
+      val in = new java.io.DataInputStream(new java.io.BufferedInputStream(sock.getInputStream))
+      val out = sock.getOutputStream
+      def line(): String = {
+        val sb = new StringBuilder
+        var c = in.read()
+        while (c != '\n') { if (c != '\r') sb += c.toChar; c = in.read() }
+        sb.toString
+      }
+      val ms = (1 to 12).map { i =>
+        val body = s"ping $i"
+        val t0 = System.nanoTime()
+        out.write(("POST /echo HTTP/1.1\r\nHost: localhost\r\n" +
+          s"Content-Length: ${body.length}\r\n\r\n$body").getBytes("UTF-8"))
+        out.flush()
+        assert(line() == "HTTP/1.1 200 OK")
+        val headers = Iterator.continually(line()).takeWhile(_.nonEmpty).toList
+        val len = headers.collectFirst {
+          case h if h.toLowerCase.startsWith("content-length:") => h.drop(15).trim.toInt
+        }.get
+        val reply = new Array[Byte](len)
+        in.readFully(reply)
+        assert(new String(reply, "UTF-8") == body)
+        (System.nanoTime() - t0) / 1e6
+      }
+      // with Nagle's algorithm on, these replies wait ~40 ms each
+      val later = ms.drop(2).sorted
+      assert(later(later.size / 2) < 20.0, s"reply ms: ${ms.map(m => f"$m%.1f")}")
+    } finally { sock.close(); ep.stop() }
   }
 
   test("MLLP endpoint: framed HL7 in, channel ACK out (contrib/hl7.py)") {
