@@ -72,10 +72,12 @@ final class RemoteAdmin(spark: SparkSession) {
     toJava(linked("name" -> channel, "status" -> st))
   }
 
-  /** remoteadmin.py:145 list_msgs (shape of views.py:71-125). */
+  /** remoteadmin.py:145 list_msgs (shape of views.py:71-125). The page
+    * and `total` come from one read of the store, so a mutation landing
+    * between them cannot make the reply contradict itself. */
   def listMsgs(channel: String, q: Search): AnyRef = {
-    val st = store(channel)
-    val rows = st.search(q).collect()
+    val df = store(channel).all()
+    val rows = MessageStore.search(df, q).collect()
     val msgs = rows.toVector.map { r =>
       linked(
         "id" -> r.getAs[String]("uuid"),
@@ -83,7 +85,7 @@ final class RemoteAdmin(spark: SparkSession) {
         "timestamp" -> timestampStr(r),
         "meta" -> metaOf(r))
     }
-    toJava(linked("messages" -> msgs, "total" -> Long.box(st.total())))
+    toJava(linked("messages" -> msgs, "total" -> Long.box(df.count())))
   }
 
   /** remoteadmin.py:186 view_msg — full message dict. */

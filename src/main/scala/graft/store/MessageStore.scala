@@ -2,6 +2,7 @@ package graft.store
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Message-store search — graft's `MessageStore.search` (reference:
   * pypeman/msgstore.py:174 and the meta filter/sort semantics at
@@ -87,14 +88,30 @@ final case class Search(
   * (msgstore.py:297/:553) are APPEND-ONLY on parquet too: each call appends
   * one row to a `_mutations` side log under the store path (Spark's file
   * index skips `_`-prefixed dirs, so the base scan never sees it) and reads
-  * reconcile latest-wins via a broadcast left join — the standard columnar
-  * upsert/tombstone pattern. At 100 TB this is the only shape that works:
-  * a point update rewrites ~100 bytes, not a partition, and the log (admin
-  * actions — replays, acks, purges) stays orders of magnitude smaller than
-  * the store, so the reconcile join is map-side. `compact()` folds the log
-  * into the base table when it grows. Mutations are sequenced by an
-  * in-process monotonic counter seeded from wall-clock micros (single
-  * admin writer, the reference's deployment shape too).
+  * reconcile latest-wins — the standard columnar upsert/tombstone pattern.
+  * At 100 TB this is the only shape that works: a point update rewrites
+  * ~100 bytes, not a partition, and the log (admin actions — replays, acks,
+  * purges) stays orders of magnitude smaller than the store, and at most
+  * [[autoCompactMutationFiles]] files long. `compact()` folds the log into
+  * the base table when it grows. Mutations are sequenced by an in-process
+  * monotonic counter seeded from wall-clock micros (single admin writer,
+  * the reference's deployment shape too).
+  *
+  * Reads resolve the store once per version, so a warm read costs only the
+  * query's own Spark job:
+  *   - the base table's schema (with `day`) is inferred by the first read
+  *     and kept; later reads pass it to the scan, which skips the inference
+  *     job. Without `mergeSchema` Spark already takes one footer's schema
+  *     for the whole table. A compact, or a read that finds the store
+  *     empty, drops the kept schema.
+  *   - the mutation log is collected and folded on the driver into the set
+  *     of tombstoned uuids and each other uuid's highest-`seq` state, kept
+  *     under the log's listing: the sorted (file name, length) pairs of
+  *     `_mutations`. Every read lists the directory and re-reads the log
+  *     only when the listing changed, so appends by another instance or
+  *     process on the same path are seen on the next read.
+  *   - the fold is applied as column expressions (hash-set membership
+  *     tests on `uuid`), not a join, so no broadcast job runs.
   *
   * The single-admin-writer assumption is ENFORCED, not just documented
   * (round-12): every mutation append and every compact runs under a
@@ -167,14 +184,29 @@ final class MessageStore(
     }
   }
 
-  def all(): DataFrame =
-    if (!baseExists)
-      throw new NoSuchElementException(s"message store at $path is empty")
-    else applyMutations(spark.read.parquet(path).drop("day"))
+  /** Base-table schema kept from the first read (see the class doc). */
+  @volatile private var baseSchema: Option[org.apache.spark.sql.types.StructType] = None
+
+  /** The reconciled store, or None for the empty store. */
+  private def current(): Option[DataFrame] =
+    if (!baseExists) { baseSchema = None; None }
+    else {
+      val base = baseSchema match {
+        case Some(s) => spark.read.schema(s).parquet(path)
+        case None =>
+          val df = spark.read.parquet(path)
+          baseSchema = Some(df.schema)
+          df
+      }
+      Some(applyMutations(base.drop("day")))
+    }
+
+  def all(): DataFrame = current().getOrElse(
+    throw new NoSuchElementException(s"message store at $path is empty"))
 
   def search(q: Search): DataFrame = MessageStore.search(all(), q)
 
-  def total(): Long = if (!baseExists) 0L else all().count()
+  def total(): Long = current().fold(0L)(_.count())
 
   /** change_message_state (msgstore.py:66, FileMessageStore :704): set one
     * message's state. Appends to the mutation log; visible to every
@@ -313,13 +345,18 @@ final class MessageStore(
 
   /** Mutation-log size in FILES (the policy unit: one append = one file;
     * listing is one namenode/listStatus call, no data read). */
-  def mutationLogFiles: Int = {
-    val (fs, p) = hadoopFs
-    if (!fs.exists(p)) 0
-    else fs.listStatus(p).count { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
+  def mutationLogFiles: Int = mutationListing.size
+
+  /** The log's data files as sorted (name, length) pairs — one listing
+    * call, no data read. */
+  private def mutationListing: Seq[(String, Long)] = {
+    val p = new org.apache.hadoop.fs.Path(mutPath)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    try fs.listStatus(p).toSeq.collect {
+      case st if st.isFile && !st.getPath.getName.startsWith("_") &&
+          !st.getPath.getName.startsWith(".") => (st.getPath.getName, st.getLen)
+    }.sorted
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
   }
 
   private def maybeAutoCompact(): Unit =
@@ -337,40 +374,54 @@ final class MessageStore(
               s"will retry on next append): ${e.getClass.getSimpleName}: ${e.getMessage}")
       }
 
-  private def hadoopFs = {
-    val p = new org.apache.hadoop.fs.Path(mutPath)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
+  /** The mutation log's fold, under the listing it was read at. */
+  @volatile private var folded: (Seq[(String, Long)], MessageStore.Fold) =
+    (Seq.empty, MessageStore.Fold.empty)
+
+  /** Fold of the log as it is now: the directory is listed on every call,
+    * the files are read (one collect) only when the listing changed. */
+  private def mutationFold(): MessageStore.Fold = {
+    val listing = mutationListing
+    val (key, fold) = folded
+    if (listing == key) fold
+    else {
+      val next =
+        if (listing.isEmpty) MessageStore.Fold.empty
+        else MessageStore.Fold(
+          spark.read.schema(MessageStore.MutationSchema).parquet(mutPath).collect())
+      folded = (listing, next)
+      next
+    }
   }
 
-  private def hasMutations: Boolean = { val (fs, p) = hadoopFs; fs.exists(p) }
-
   /** Latest-wins reconcile: any tombstone kills the row; otherwise the
-    * highest-seq state change overrides the stored state. The log is tiny
-    * relative to the store, so the join side is broadcast — no shuffle of
-    * the base table. A store written without a `state` column (bare Msg
-    * frames in tests) is treated as all-PENDING, the state the reference
-    * assigns at store time (msgstore.py:630). */
-  private def applyMutations(base: DataFrame): DataFrame =
-    if (!hasMutations) base
-    else {
-      val latest = spark.read.parquet(mutPath)
-        .groupBy("uuid")
-        .agg(
-          max(col("tombstone")).as("_mut_tombstone"),
-          max(when(!col("tombstone"), struct(col("seq"), col("new_state")))).as("_mut"))
-        .select(col("uuid"), col("_mut_tombstone"), col("_mut.new_state").as("_mut_state"))
-      val withState =
-        if (base.columns.contains("state")) base
-        else base.withColumn("state", lit(graft.model.Msg.PENDING))
-      withState.join(broadcast(latest), Seq("uuid"), "left")
-        .filter(col("_mut_tombstone").isNull || !col("_mut_tombstone"))
-        .withColumn("state", coalesce(col("_mut_state"), col("state")))
-        .drop("_mut_tombstone", "_mut_state")
-    }
+    * highest-seq state change overrides the stored state. Both are column
+    * expressions over the driver-side fold — a hash-set filter, and one
+    * hash-set test per changed-to state — so the base table is neither
+    * joined nor shuffled, a row costs O(distinct states) lookups however
+    * long the log, and a null uuid matches no mutation. A store written
+    * without a `state` column (bare Msg frames in tests) is treated as
+    * all-PENDING, the state the reference assigns at store time
+    * (msgstore.py:630). */
+  private def applyMutations(base: DataFrame): DataFrame = {
+    val fold = mutationFold()
+    val withState =
+      if (base.columns.contains("state")) base
+      else base.withColumn("state", lit(graft.model.Msg.PENDING))
+    val live =
+      if (fold.tombstones.isEmpty) withState
+      else withState.filter(
+        col("uuid").isNull || !ColumnBridge.inSet(col("uuid"), fold.tombstones))
+    if (fold.latest.isEmpty) live
+    else live.withColumn("state", coalesce(fold.latest.toSeq.map { case (state, uuids) =>
+      when(ColumnBridge.inSet(col("uuid"), uuids), state)
+    } :+ col("state"): _*))
+  }
 
   /** Fold the mutation log into the base table and clear it (the periodic
-    * maintenance job a long-lived store runs: rewrite once, reads stop
-    * paying the reconcile join).
+    * maintenance job a long-lived store runs: rewrite once, and reads stop
+    * carrying the log's expressions). The kept base schema is dropped, so
+    * the next read infers the rewritten table's schema again.
     *
     * Crash-safe by staging: ONE pass writes the reconciled table into a
     * SIBLING directory from the untouched base, then delete+rename swaps
@@ -393,6 +444,7 @@ final class MessageStore(
         if (!fs.rename(staging, storeDir))
           throw new java.io.IOException(
             s"compact recovery: rename $staging -> $storeDir failed")
+        baseSchema = None
       }
       return
     }
@@ -415,6 +467,7 @@ final class MessageStore(
           s"compact: rename $staging -> $storeDir failed; staged copy retained " +
             "(the next compact() will promote it)")
     }
+    baseSchema = None
   }
 
   /** Replay (channels.py:857): re-run a channel on stored messages. The
@@ -466,10 +519,39 @@ object MessageStore {
     * so breaking an older lease only ever evicts a crashed holder. */
   val DefaultStaleLockMs = 600000L
   /** Default auto-compact threshold: 64 mutation files ≈ 64 admin actions
-    * between folds — the reconcile join side stays a trivially-broadcast
-    * few-KB relation, and a compact (one base rewrite) amortizes over 64
-    * point updates. Tune per store via the constructor. */
+    * between folds — the driver-side fold and its literal expressions stay
+    * a few KB, and a compact (one base rewrite) amortizes over 64 point
+    * updates. Tune per store via the constructor. */
   val DefaultAutoCompactMutationFiles = 64
+
+  /** The `_mutations` log's rows, as `appendMutation` writes them. */
+  private val MutationSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "uuid STRING, new_state STRING, tombstone BOOLEAN, seq BIGINT")
+
+  /** The mutation log folded by the latest-wins rules: every uuid with a
+    * tombstone, and the other uuids grouped by their latest state: the one
+    * of highest `seq`, ties going to the greater `new_state`. A tombstone
+    * is terminal, so a tombstoned uuid has no state, and a latest state of
+    * null keeps the stored one. Rows
+    * without a uuid, flag or seq (which `appendMutation` never writes)
+    * match nothing. */
+  private final case class Fold(tombstones: Set[String], latest: Map[String, Set[String]])
+
+  private object Fold {
+    val empty: Fold = Fold(Set.empty, Map.empty)
+
+    def apply(log: Array[Row]): Fold = {
+      val rows = log.filterNot(r => r.isNullAt(0) || r.isNullAt(2) || r.isNullAt(3))
+      val tombstones = rows.filter(_.getBoolean(2)).map(_.getString(0)).toSet
+      val states = rows.filterNot(r => r.getBoolean(2) || tombstones(r.getString(0)))
+        .groupBy(_.getString(0))
+        .flatMap { case (uuid, rs) =>
+          Option(rs.maxBy(r => (r.getLong(3), Option(r.getString(1)))).getString(1))
+            .map(uuid -> _)
+        }
+      Fold(tombstones, states.groupBy(_._2).map { case (s, us) => s -> us.keySet })
+    }
+  }
 
   /** Search over any Msg-shaped DataFrame (store-backed or in-flight). */
   def search(df: DataFrame, q: Search): DataFrame = {

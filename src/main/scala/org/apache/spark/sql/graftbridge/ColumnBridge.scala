@@ -1,10 +1,11 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, InSet}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, ExpressionUtils, SparkSession => ClassicSparkSession}
 import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.unsafe.types.UTF8String
 import java.util.concurrent.atomic.AtomicLong
 
 /** Bridge to the `private[sql]` Column↔Expression converters — the standard
@@ -14,6 +15,13 @@ import java.util.concurrent.atomic.AtomicLong
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** `c` is one of `values`, as one hash-set expression. `isin` builds an
+    * `In` over one literal per value, which the analyzer and optimizer walk
+    * value by value before it becomes a hash set — seconds of planning at
+    * tens of thousands of values. */
+  def inSet(c: Column, values: Set[String]): Column =
+    column(InSet(expression(c), values.map(UTF8String.fromString)))
 
   /** DataFrame over a custom LogicalPlan (for operators that introduce
     * their own plan nodes, e.g. the native as-of join). */

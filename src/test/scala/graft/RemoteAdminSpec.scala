@@ -89,6 +89,17 @@ class RemoteAdminSpec extends SparkSpec {
     assert(resp.contains(""""total":2"""))
   }
 
+  test("list_msgs on a warm store with a mutation log runs at most 4 Spark jobs") {
+    val (admin, store) = freshStore()
+    store.changeMessageState("m1", "error")
+    val req =
+      """{"jsonrpc":"2.0","method":"list_msgs","params":["chan1",0,10,"timestamp",null,null,null,null,null],"id":5}"""
+    admin.dispatch(req) // warm: the store's schema and log fold are resolved
+    val (resp, jobs) = JobCount(spark)(admin.dispatch(req))
+    assert(resp.contains(""""id":"m1","state":"error"""") && resp.contains(""""total":2"""))
+    assert(jobs <= 4, s"list_msgs ran $jobs Spark jobs")
+  }
+
   test("view_msg: full message.to_dict(encode_payload=False) layout") {
     val (admin, _) = freshStore()
     val resp = admin.dispatch(

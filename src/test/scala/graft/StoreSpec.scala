@@ -322,6 +322,82 @@ class StoreSpec extends SparkSpec {
     assert(store.total() == 4) // ghost mutation matches nothing, reads work
   }
 
+  test("MessageStore (parquet): a second instance's state change and delete are seen on the next search") {
+    val dir = Files.createTempDirectory("graft_store_peer").toString
+    val a = new MessageStore(spark, s"$dir/msgs")
+    a.save(msgs.withColumn("state", lit("pending")))
+    a.changeMessageState("a", "error")
+    def states(st: MessageStore) = st.search(Search(count = 10))
+      .select("uuid", "state").as[(String, String)].collect().toMap
+    assert(states(a) == Map("a" -> "error", "b" -> "pending", "c" -> "pending", "d" -> "pending"))
+    val b = new MessageStore(spark, s"$dir/msgs")
+    b.changeMessageState("b", "processed")
+    b.delete("c")
+    assert(states(a) == Map("a" -> "error", "b" -> "processed", "d" -> "pending"))
+  }
+
+  test("MessageStore (parquet): a save after compacting to empty re-resolves the schema") {
+    val dir = Files.createTempDirectory("graft_store_reschema").toString
+    val store = new MessageStore(spark, s"$dir/msgs")
+    store.save(msgs.limit(2).withColumn("state", lit("pending")))
+    assert(store.total() == 2) // the store's schema is now kept
+    store.delete("a")
+    store.delete("b")
+    store.compact() // all tombstoned: the empty store
+    store.save(msgs.withColumn("state", lit("pending")).withColumn("lane", lit("fast")))
+    assert(store.all().select("lane").as[String].collect().toSeq == Seq.fill(4)("fast"))
+  }
+
+  test("MessageStore (parquet): a row with a null uuid survives a reconcile with tombstones") {
+    val dir = Files.createTempDirectory("graft_store_nulluuid").toString
+    val store = new MessageStore(spark, s"$dir/msgs")
+    store.save(msgs.withColumn("uuid", when(col("uuid") =!= "a", col("uuid")))
+      .withColumn("state", lit("pending")))
+    store.delete("b")
+    store.changeMessageState("c", "error")
+    val got = store.all().select("uuid", "state").as[(Option[String], String)].collect().toSet
+    assert(got == Set((None, "pending"), (Some("c"), "error"), (Some("d"), "pending")))
+  }
+
+  test("MessageStore (parquet): a 50,000-row mutation log reconciles like a plain fold") {
+    val dir = Files.createTempDirectory("graft_store_biglog").toString
+    val store = new MessageStore(spark, s"$dir/msgs", autoCompactMutationFiles = 0)
+    val uuids = (0 until 300).map(i => f"u$i%03d")
+    store.save(uuids.map(u => (u, "2024-01-01 10:00:00", s"p $u")).toDF("uuid", "ts0", "payload")
+      .withColumn("ts", col("ts0").cast("timestamp")).drop("ts0")
+      .withColumn("meta", map().cast("map<string,string>"))
+      .withColumn("state", lit("pending")))
+    // 350 ids (50 match no stored row), distinct seqs in shuffled order,
+    // ~0.2% tombstones so most ids end with a state change
+    val rnd = new scala.util.Random(7)
+    val log = rnd.shuffle((0 until 50000).toVector).map { seq =>
+      val u = f"u${rnd.nextInt(350)}%03d"
+      if (rnd.nextInt(500) == 0) (u, null: String, true, seq.toLong)
+      else (u, Seq("error", "processed", "pending")(rnd.nextInt(3)), false, seq.toLong)
+    }
+    log.toDF("uuid", "new_state", "tombstone", "seq").coalesce(1)
+      .write.mode("append").parquet(s"$dir/msgs/_mutations")
+    val dead = log.filter(_._3).map(_._1).toSet
+    val latest = log.filterNot(_._3).groupBy(_._1).map { case (u, rs) => u -> rs.maxBy(_._4)._2 }
+    val expected = uuids.filterNot(dead).map(u => u -> latest.getOrElse(u, "pending")).toMap
+    assert(dead.nonEmpty && latest.size > 250)
+    assert(store.all().select("uuid", "state").as[(String, String)].collect().toMap == expected)
+  }
+
+  test("MessageStore (parquet): a warm search through the mutation log runs one Spark job") {
+    val dir = Files.createTempDirectory("graft_store_jobs").toString
+    val store = new MessageStore(spark, s"$dir/msgs")
+    store.save(msgs.withColumn("state", lit("pending")))
+    store.changeMessageState("b", "error")
+    store.delete("d")
+    val q = Search(text = Some("world"), count = 10)
+    store.search(q).collect() // warm: the schema and the log fold are resolved
+    val (rows, jobs) = JobCount(spark)(store.search(q).collect())
+    assert(rows.map(r => r.getAs[String]("uuid") -> r.getAs[String]("state")).toSeq ==
+      Seq("a" -> "pending", "b" -> "error"))
+    assert(jobs == 1, s"a warm search ran $jobs Spark jobs")
+  }
+
   test("MessageStore (parquet): replay renews and saves results back as processed") {
     val dir = Files.createTempDirectory("graft_store_replay").toString
     val store = new MessageStore(spark, s"$dir/msgs")
