@@ -66,20 +66,22 @@ object EsbExample {
   }
 
   /** Batch run over a request-log DataFrame (the bulk path for the same
-    * traffic the endpoint serves row-at-a-time): run the channel, persist
-    * main + rejected outputs, drive parked retries to completion. */
+    * traffic the endpoint serves row-at-a-time): run the channel, drive
+    * parked retries to completion, then persist main + rejected + retry
+    * outcomes in ONE store write, so every file the batch writes carries
+    * one schema (retried rows have no `attempt`; it reads as null for
+    * them). All or nothing: a failure inside the retry loop stores
+    * nothing from the batch. */
   def runBatch(w: Wiring, requests: DataFrame, maxAttempts: Int = 3): DataFrame = {
     val r = w.channel.run(requests)
-    w.store.save(r.main)
-    r.rejected.foreach(rej => w.store.save(rej))
-    val parked = r.retries.filter(!_._2.isEmpty)
-    if (parked.nonEmpty) {
-      val done = RetryDriver.resendLoop(w.channel, parked, "ts", "uuid", maxAttempts)
-      w.store.save(done.states
+    val retried = Option.when(r.retries.nonEmpty) {
+      RetryDriver.resendLoop(w.channel, r.retries, "ts", "uuid", maxAttempts).states
         .withColumn("state",
           when(col("retry_state") === Msg.PROCESSED, Msg.PROCESSED).otherwise(Msg.ERROR))
-        .drop("retry_state", "emit_seq", "attempt")) // driver-added columns only
+        .drop("retry_state", "emit_seq", "attempt") // driver-added columns only
     }
+    w.store.save((r.main +: (r.rejected.toSeq ++ retried))
+      .reduce(_.unionByName(_, allowMissingColumns = true)))
     w.store.all()
   }
 }

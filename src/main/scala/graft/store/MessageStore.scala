@@ -89,6 +89,8 @@ final case class Search(
   * one row to a `_mutations` side log under the store path (Spark's file
   * index skips `_`-prefixed dirs, so the base scan never sees it) and reads
   * reconcile latest-wins — the standard columnar upsert/tombstone pattern.
+  * The append is a one-row parquet file written on the driver by parquet's
+  * own writer and renamed into place, so a state change runs no Spark job.
   * At 100 TB this is the only shape that works: a point update rewrites
   * ~100 bytes, not a partition, and the log (admin actions — replays, acks,
   * purges) stays orders of magnitude smaller than the store, and at most
@@ -104,12 +106,14 @@ final case class Search(
   *     job. Without `mergeSchema` Spark already takes one footer's schema
   *     for the whole table. A compact, or a read that finds the store
   *     empty, drops the kept schema.
-  *   - the mutation log is collected and folded on the driver into the set
-  *     of tombstoned uuids and each other uuid's highest-`seq` state, kept
-  *     under the log's listing: the sorted (file name, length) pairs of
-  *     `_mutations`. Every read lists the directory and re-reads the log
-  *     only when the listing changed, so appends by another instance or
-  *     process on the same path are seen on the next read.
+  *   - the mutation log is read on the driver by parquet's own reader and
+  *     folded into the set of tombstoned uuids and each other uuid's
+  *     highest-`seq` state, kept under the log's listing: the sorted (file
+  *     name, length) pairs of `_mutations`. Every read lists the directory
+  *     and, only when the listing changed, reads exactly the listed files
+  *     (no Spark job), so appends by another instance or process on the
+  *     same path are seen on the next read. Logs written by Spark's parquet
+  *     writer in older stores fold the same.
   *   - the fold is applied as column expressions (hash-set membership
   *     tests on `uuid`), not a join, so no broadcast job runs.
   *
@@ -225,14 +229,35 @@ final class MessageStore(
   def get(uuid: String): Option[Row] =
     all().filter(col("uuid") === uuid).limit(1).collect().headOption
 
+  /** Append one mutation row to the log, under the store lease: parquet's
+    * own writer puts a one-row file on the driver (no Spark job) under a
+    * hidden `.…tmp` name, which is renamed into the log when complete. A
+    * crash before the rename leaves only the hidden file, which every
+    * listing and scan skips and the next compact removes with the log. */
   private def appendMutation(
       uuid: String, newState: Option[String], tombstone: Boolean): Unit =
     withStoreLock("mutate") {
-      import spark.implicits._
-      Seq((uuid, newState.orNull, tombstone, seqGen.incrementAndGet()))
-        .toDF("uuid", "new_state", "tombstone", "seq")
-        .coalesce(1)
-        .write.mode("append").parquet(mutPath)
+      val seq = seqGen.incrementAndGet()
+      val conf = spark.sessionState.newHadoopConf()
+      val name = s"part-$seq-${java.util.UUID.randomUUID()}.parquet"
+      val tmp = new org.apache.hadoop.fs.Path(mutPath, s".$name.tmp")
+      val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+        .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(tmp, conf))
+        .withConf(conf).withType(MessageStore.MutationParquetSchema).build()
+      try {
+        val g = new org.apache.parquet.example.data.simple.SimpleGroup(
+          MessageStore.MutationParquetSchema)
+        Option(uuid).foreach(g.add("uuid", _))
+        newState.foreach(g.add("new_state", _))
+        g.add("tombstone", tombstone)
+        g.add("seq", seq)
+        w.write(g)
+      } finally w.close()
+      val fs = tmp.getFileSystem(conf)
+      if (!fs.rename(tmp, new org.apache.hadoop.fs.Path(mutPath, name))) {
+        fs.delete(tmp, false)
+        throw new java.io.IOException(s"mutation log: rename of $tmp failed")
+      }
       maybeAutoCompact()
     }
 
@@ -379,16 +404,18 @@ final class MessageStore(
     (Seq.empty, MessageStore.Fold.empty)
 
   /** Fold of the log as it is now: the directory is listed on every call,
-    * the files are read (one collect) only when the listing changed. */
+    * and only when the listing changed are exactly the listed files read,
+    * with parquet's reader on the driver (no Spark job), so the fold and
+    * its key come from one listing. */
   private def mutationFold(): MessageStore.Fold = {
     val listing = mutationListing
     val (key, fold) = folded
     if (listing == key) fold
     else {
-      val next =
-        if (listing.isEmpty) MessageStore.Fold.empty
-        else MessageStore.Fold(
-          spark.read.schema(MessageStore.MutationSchema).parquet(mutPath).collect())
+      val conf = spark.sessionState.newHadoopConf()
+      val next = MessageStore.Fold(listing.toArray.flatMap { case (name, _) =>
+        MessageStore.readMutations(new org.apache.hadoop.fs.Path(mutPath, name), conf)
+      })
       folded = (listing, next)
       next
     }
@@ -524,9 +551,29 @@ object MessageStore {
     * updates. Tune per store via the constructor. */
   val DefaultAutoCompactMutationFiles = 64
 
-  /** The `_mutations` log's rows, as `appendMutation` writes them. */
-  private val MutationSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "uuid STRING, new_state STRING, tombstone BOOLEAN, seq BIGINT")
+  /** The `_mutations` log's rows, as `appendMutation` writes them (the
+    * columns Spark's writer gave the same rows in older logs). */
+  private val MutationParquetSchema = org.apache.parquet.schema.MessageTypeParser
+    .parseMessageType("""message spark_schema { optional binary uuid (STRING);
+      optional binary new_state (STRING); optional boolean tombstone; optional int64 seq; }""")
+
+  /** One log file's rows as (uuid, new_state, tombstone, seq), a missing
+    * value read as null — driver-written and Spark-written files alike. */
+  private def readMutations(
+      file: org.apache.hadoop.fs.Path, conf: org.apache.hadoop.conf.Configuration): Seq[Row] = {
+    val r = org.apache.parquet.hadoop.ParquetReader
+      .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), file)
+      .withConf(conf).build()
+    try Iterator.continually(r.read()).takeWhile(_ != null).map { g =>
+      def has(f: String) = g.getFieldRepetitionCount(f) > 0
+      Row(
+        if (has("uuid")) g.getString("uuid", 0) else null,
+        if (has("new_state")) g.getString("new_state", 0) else null,
+        if (has("tombstone")) g.getBoolean("tombstone", 0) else null,
+        if (has("seq")) g.getLong("seq", 0) else null)
+    }.toVector
+    finally r.close()
+  }
 
   /** The mutation log folded by the latest-wins rules: every uuid with a
     * tombstone, and the other uuids grouped by their latest state: the one

@@ -51,6 +51,33 @@ class RetryDriverSpec extends SparkSpec {
     assert(rows(3) == ((4L, 3L, Msg.ERROR, None, "d")))
   }
 
+  test("resendLoop: a 3-round loop runs 4 Spark jobs, one per grouping") {
+    // read from a file: a toDF fixture folds into a LocalRelation, whose
+    // probes and checkpoints run no job and so would count nothing
+    val dir = Files.createTempDirectory("graft_retry_jobs").toString
+    input.write.parquet(s"$dir/in")
+    val chan = Channel("rc").add(sender)
+    val first = chan.run(spark.read.parquet(s"$dir/in").withColumn("attempt", lit(0L)))
+    val (r, jobs) = JobCount(spark)(
+      RetryDriver.resendLoop(chan, first.retries, "ts", "id", maxAttempts = 3))
+    assert(r.rounds == 3)
+    assert(jobs == 4, s"a 3-round resendLoop ran $jobs Spark jobs")
+    assert(r.states.select("id", "retry_state").as[(Long, String)].collect().toMap ==
+      Map(1L -> Msg.PROCESSED, 2L -> Msg.PROCESSED, 3L -> Msg.PROCESSED, 4L -> Msg.ERROR))
+  }
+
+  test("resendLoop: nothing parked runs no round; no groups at all still throws") {
+    val chan = Channel("none").add(sender.withAutoRetry(lit(false)))
+    val first = chan.run(input.withColumn("attempt", lit(0L)))
+    assert(first.retries.map(_._1) == Seq("send")) // a group, but empty
+    val r = RetryDriver.resendLoop(chan, first.retries, "ts", "id", maxAttempts = 3)
+    assert(r.rounds == 0)
+    assert(r.states.count() == 0)
+    assert(Seq("id", "attempt", "retry_state", "emit_seq").forall(r.states.columns.contains))
+    intercept[IllegalArgumentException](
+      RetryDriver.resendLoop(chan, Seq.empty, "ts", "id", maxAttempts = 3))
+  }
+
   test("re-park can progress to a later node (inject at nodename, fail further down)") {
     // n1 fails the first handle only; n2 fails id=2 until attempt 2
     val n1 = Node("n1")(_.withColumn("payload", concat(col("payload"), lit("+1"))))

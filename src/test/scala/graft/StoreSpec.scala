@@ -3,6 +3,7 @@ package graft
 import graft.store.{KVState, MessageStore, RetryStore, Search}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 class StoreSpec extends SparkSpec {
   import spark.implicits._
@@ -396,6 +397,93 @@ class StoreSpec extends SparkSpec {
     assert(rows.map(r => r.getAs[String]("uuid") -> r.getAs[String]("state")).toSeq ==
       Seq("a" -> "pending", "b" -> "error"))
     assert(jobs == 1, s"a warm search ran $jobs Spark jobs")
+  }
+
+  test("MessageStore (parquet): a state change and a delete run no Spark job") {
+    val dir = Files.createTempDirectory("graft_store_mutjobs").toString
+    val store = new MessageStore(spark, s"$dir/msgs")
+    store.save(msgs.withColumn("state", lit("pending")))
+    assert(store.total() == 4)
+    val (_, changeJobs) = JobCount(spark)(store.changeMessageState("b", "error"))
+    val (_, deleteJobs) = JobCount(spark)(store.delete("d"))
+    assert((changeJobs, deleteJobs) == ((0, 0)),
+      s"changeMessageState ran $changeJobs Spark jobs, delete $deleteJobs")
+    assert(store.all().select("uuid", "state").as[(String, String)].collect().toMap ==
+      Map("a" -> "pending", "b" -> "error", "c" -> "pending"))
+  }
+
+  test("MessageStore (parquet): a hidden temp file left by a crashed append is ignored") {
+    val dir = Files.createTempDirectory("graft_store_tmplog").toString
+    val store = new MessageStore(spark, s"$dir/msgs", autoCompactMutationFiles = 0)
+    store.save(msgs.withColumn("state", lit("pending")))
+    store.changeMessageState("a", "error")
+    val log = java.nio.file.Paths.get(s"$dir/msgs/_mutations")
+    val written = Files.list(log).iterator().asScala.filter(_.getFileName.toString.startsWith("part-")).toSeq
+    assert(written.size == 1)
+    // a crash mid-append: half a file under the hidden temp name
+    val bytes = Files.readAllBytes(written.head)
+    Files.write(log.resolve(".part-crashed.parquet.tmp"), bytes.take(bytes.length / 2))
+    assert(store.mutationLogFiles == 1)
+    assert(store.all().select("uuid", "state").as[(String, String)].collect().toMap ==
+      Map("a" -> "error", "b" -> "pending", "c" -> "pending", "d" -> "pending"))
+    store.changeMessageState("b", "processed") // a later append still lands
+    assert(store.mutationLogFiles == 2)
+    assert(store.get("b").map(_.getAs[String]("state")) == Some("processed"))
+  }
+
+  test("MessageStore (parquet): a log of Spark-written and driver-written files folds like a plain fold") {
+    val dir = Files.createTempDirectory("graft_store_mixedlog").toString
+    val store = new MessageStore(spark, s"$dir/msgs", autoCompactMutationFiles = 0)
+    val uuids = (0 until 60).map(i => f"u$i%02d")
+    store.save(uuids.map(u => (u, "2024-01-01 10:00:00", s"p $u")).toDF("uuid", "ts0", "payload")
+      .withColumn("ts", col("ts0").cast("timestamp")).drop("ts0")
+      .withColumn("meta", map().cast("map<string,string>"))
+      .withColumn("state", lit("pending")))
+    val rnd = new scala.util.Random(11)
+    val states = Seq("error", "processed", "pending")
+    def entries(n: Int, seq0: Long) = rnd.shuffle((0 until n).toVector).map { i =>
+      val u = uuids(rnd.nextInt(uuids.size))
+      if (rnd.nextInt(20) == 0) (u, null: String, true, seq0 + i)
+      else (u, states(rnd.nextInt(3)), false, seq0 + i)
+    }
+    def sparkAppend(es: Seq[(String, String, Boolean, Long)]): Unit =
+      es.toDF("uuid", "new_state", "tombstone", "seq").coalesce(1)
+        .write.mode("append").parquet(s"$dir/msgs/_mutations")
+    // an older store's log: Spark-written files whose seqs precede the
+    // driver's wall-clock seqs, then driver appends, then Spark-written
+    // files with seqs above them
+    val before = entries(200, 0L)
+    before.grouped(50).foreach(sparkAppend)
+    val driver = (0 until 30).map { i =>
+      val u = uuids(rnd.nextInt(uuids.size))
+      if (i % 10 == 9) { store.delete(u); (u, null: String, true, Long.MaxValue / 2 + i) }
+      else { val s = states(i % 3); store.changeMessageState(u, s); (u, s, false, Long.MaxValue / 2 + i) }
+    }
+    val after = entries(40, Long.MaxValue - 100)
+    sparkAppend(after)
+    assert(store.mutationLogFiles == 4 + 30 + 1)
+    val log = before ++ driver ++ after
+    val dead = log.filter(_._3).map(_._1).toSet
+    val latest = log.filterNot(_._3).groupBy(_._1).map { case (u, rs) => u -> rs.maxBy(_._4)._2 }
+    val expected = uuids.filterNot(dead).map(u => u -> latest.getOrElse(u, "pending")).toMap
+    assert(dead.nonEmpty && latest.size > 40)
+    assert(store.all().select("uuid", "state").as[(String, String)].collect().toMap == expected)
+  }
+
+  test("MessageStore (parquet): compact() applies driver-written mutations and empties the log") {
+    val dir = Files.createTempDirectory("graft_store_compactlog").toString
+    val store = new MessageStore(spark, s"$dir/msgs", autoCompactMutationFiles = 0)
+    store.save(msgs.withColumn("state", lit("pending")))
+    store.changeMessageState("a", "error")
+    store.changeMessageState("c", "processed")
+    store.delete("b")
+    assert(store.mutationLogFiles == 3)
+    store.compact()
+    assert(store.mutationLogFiles == 0)
+    assert(spark.read.parquet(s"$dir/msgs").select("uuid", "state").as[(String, String)]
+      .collect().toMap == Map("a" -> "error", "c" -> "processed", "d" -> "pending"))
+    assert(store.all().select("uuid", "state").as[(String, String)].collect().toMap ==
+      Map("a" -> "error", "c" -> "processed", "d" -> "pending"))
   }
 
   test("MessageStore (parquet): replay renews and saves results back as processed") {
