@@ -7,7 +7,12 @@ object GraftSession {
 
   /** Settings every graft session needs; callable on any builder so the
     * driver-owned mains (Verify/Bench) and tests share one definition. */
-  def configure(b: SparkSession.Builder): SparkSession.Builder =
+  def configure(b: SparkSession.Builder): SparkSession.Builder = {
+    // TCP_NODELAY for [[graft.net.HttpEndpoint]]'s kept-alive replies. The
+    // JDK reads this JVM-wide property once, at the process's first
+    // `HttpServer.create`, so it is set where the session is built, before
+    // any JDK server can exist; a user's setting wins.
+    System.getProperties.putIfAbsent("sun.net.httpserver.nodelay", "true")
     b.config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       // events.parquet carries TIMESTAMP(NANOS); read as long (see Tables)
@@ -40,6 +45,7 @@ object GraftSession {
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         (1 << 20).toString)
       .config("spark.ui.enabled", "false")
+  }
 
   /** RocksDB state store provider — the production state backend for the
     * stateful streaming tier (ChangeFeed, Sessionize, HeavyHittersStream,

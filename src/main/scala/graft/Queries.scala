@@ -4353,11 +4353,11 @@ object Queries {
       val buyers = t.lineitem.filter(col("l_partkey") % 100 === 0)
         .join(t.orders, col("l_orderkey") === col("o_orderkey"))
         .select(col("l_partkey").as("p"), col("o_custkey").as("c")).distinct()
-      val e = buyers.as("b1")
+      // pinned: feeds the wedge join (twice via und), the anti join and
+      // the degree table
+      val (e, nE) = graft.ops.Materialize.counted(buyers.as("b1")
         .join(buyers.as("b2"), col("b1.p") === col("b2.p") && col("b1.c") < col("b2.c"))
-        .select(col("b1.c").as("a"), col("b2.c").as("b")).distinct()
-        .localCheckpoint() // feeds the wedge join (twice via und), the
-                           // anti join and the degree table
+        .select(col("b1.c").as("a"), col("b2.c").as("b")).distinct())
       // below-threshold fast path (round 19, LocalSolve): wedge counts,
       // edge anti-filter and the fl4 jaccard in one task — identical
       // arithmetic, same (cn ≥ 3) cut. TWO-stage gate because wedge
@@ -4365,8 +4365,7 @@ object Queries {
       // with 2¹⁸ neighbors would OOM the one task): the edge count cap
       // first, then one cheap degree-census agg over the SAME checkpoint
       // bounding the actual wedge volume.
-      if (graft.graph.LocalSolve.threshold(s) > 0 &&
-          e.count() <= math.min(graft.graph.LocalSolve.threshold(s), 1L << 18) &&
+      if (graft.graph.LocalSolve.fits(nE, 1L << 18) &&
           e.select(col("a").as("n")).unionAll(e.select(col("b").as("n")))
             .groupBy(col("n")).agg(count(lit(1)).as("d"))
             .agg(sum(col("d") * col("d"))).head.getLong(0) <= (1L << 24))

@@ -363,23 +363,19 @@ object Dedup {
       s"threshold must be in (0, 1), got $threshold")
     // distinct per-doc token sets, hashed; reused by prefix AND verify →
     // checkpoint once (at cluster scale: a persisted intermediate table)
-    val docs = df.select(
+    val (docs, nDocs) = graft.ops.Materialize.counted(df.select(
         col(idCol).as("id"),
         transform(array_distinct(split(trim(col(textCol)), "\\s+")),
           t => xxhash64(t)).as("hs"))
-      .select(col("id"), col("hs"), size(col("hs")).as("m"))
-      .localCheckpoint(true)
+      .select(col("id"), col("hs"), size(col("hs")).as("m")))
     // below-threshold fast path (round 19, LocalSolve): posting lists +
     // exact-Jaccard verification in one task over the SAME checkpointed
     // hashed-token relation (the prefix filter is lossless, so both
     // paths emit exactly the J ≥ t pairs). Tighter cap than the shared
     // default: candidate volume is Σ df(token)², super-linear in the doc
     // count, so one task only wins while that stays small.
-    if (graft.graph.LocalSolve.threshold(df.sparkSession) > 0 &&
-        docs.schema("id").dataType ==
-          org.apache.spark.sql.types.LongType &&
-        docs.count() <= math.min(
-          graft.graph.LocalSolve.threshold(df.sparkSession), 1L << 14)) {
+    if (docs.schema("id").dataType == org.apache.spark.sql.types.LongType &&
+        graft.graph.LocalSolve.fits(nDocs, 1L << 14)) {
       return graft.graph.LocalSolve.prefixJoinLocal(docs, threshold)
     }
     val dfreq = docs.select(explode(col("hs")).as("h"))

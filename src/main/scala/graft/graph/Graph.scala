@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.ops.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -47,19 +48,22 @@ object Graph {
     * superlinear step) is skew-proof where a naive neighbor self-join
     * explodes on hubs. Three uniform-key shuffles total: degree agg,
     * wedge self-join on u, closure join on (x, y). */
-  def triangles(edges: DataFrame): DataFrame =
+  def triangles(edges: DataFrame): DataFrame = {
     // checkpointed once — it feeds the degree agg, the orientation and
     // the closure join
-    trianglesCanonical(canonical(edges).localCheckpoint())
+    val (e, m) = Materialize.counted(canonical(edges))
+    trianglesCanonical(e, m)
+  }
 
   /** [[triangles]] over an ALREADY canonical (a < b, distinct,
-    * materialized) edge relation — shared with [[clusteringCoefficient]]
-    * so composites don't pay the canonicalize+checkpoint twice. */
-  private def trianglesCanonical(e: DataFrame): DataFrame = {
+    * materialized) edge relation of `m` rows — shared with
+    * [[clusteringCoefficient]] so composites don't pay the
+    * canonicalize+checkpoint twice. */
+  private def trianglesCanonical(e: DataFrame, m: Long): DataFrame = {
     // below-threshold fast path (round 19, LocalSolve): sorted-merge
     // listing over greater-neighbor adjacency in one task — the same
     // once-per-triangle bag of id-sorted triples.
-    if (LocalSolve.allLong(e, "a", "b") && LocalSolve.fits(e).isDefined)
+    if (LocalSolve.allLong(e, "a", "b") && LocalSolve.fits(m))
       return LocalSolve.trianglesLocal(e)
     val deg = e.select(col("a").as("n")).unionAll(e.select(col("b").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("d"))
@@ -98,15 +102,15 @@ object Graph {
   def clusteringCoefficient(edges: DataFrame): DataFrame = {
     // ONE canonical materialization feeds both the degree table and the
     // whole triangle pipeline
-    val e = canonical(edges).localCheckpoint()
+    val (e, m) = Materialize.counted(canonical(edges))
     // below-threshold fast path (round 19, LocalSolve): degrees,
     // triangle credits and the coefficient in one task, identical
     // 2.0·T/(deg·(deg−1)) double arithmetic.
-    if (LocalSolve.allLong(e, "a", "b") && LocalSolve.fits(e).isDefined)
+    if (LocalSolve.allLong(e, "a", "b") && LocalSolve.fits(m))
       return LocalSolve.clusteringCoefLocal(e)
     val deg = e.select(col("a").as("n")).unionAll(e.select(col("b").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("degree"))
-    val triPerNode = trianglesCanonical(e)
+    val triPerNode = trianglesCanonical(e, m)
       .select(explode(array(col("n1"), col("n2"), col("n3"))).as("n"))
       .groupBy(col("n")).agg(count(lit(1)).as("tri_count"))
     deg.join(triPerNode, Seq("n"), "left")
@@ -149,19 +153,18 @@ object Graph {
     // round, and recomputing an expensive upstream candidate generation
     // (LSH pairs, co-occurrence joins) per round would dominate the job
     val e = edges.toDF("src", "dst")
-    val both = e
-      .unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(true)
+    val (both, nBoth) = Materialize.counted(
+      e.unionByName(e.select(col("dst").as("src"), col("src").as("dst"))))
     // below-threshold fast path (round 19, LocalSolve): the per-round
     // fixed cost (shuffles + checkpoint + job round-trip) dominates when
     // the edge set fits one task — run the SAME synchronous min-label
     // fixpoint (same maxIter contract) inside one executor task. The
     // node relation rides along because labels live on the node
     // universe only.
-    val n0 = nodes.toDF("id").localCheckpoint(true)
+    val (n0, nNodes) = Materialize.counted(nodes.toDF("id"))
     if (LocalSolve.allLong(both, "src", "dst") &&
         LocalSolve.allLong(n0, "id") &&
-        LocalSolve.fits(both).isDefined && LocalSolve.fits(n0).isDefined) {
+        LocalSolve.fits(nBoth) && LocalSolve.fits(nNodes)) {
       return LocalSolve.minLabelComponents(
         both.select(lit(0).as("t"), col("src").as("x"), col("dst").as("y"))
           .unionByName(n0.select(lit(2).as("t"), col("id").as("x"),
@@ -176,16 +179,16 @@ object Graph {
         .groupBy(col("src").as("id2"))
         .agg(min(col("component")).as("nmin"))
       // convergence check rides the label-update job as an observed
-      // metric — one job per round, no second join-and-count
-      val obs = org.apache.spark.sql.Observation(s"cc_changed_$iter")
-      val next = labels.join(neighborMin, labels("id") === col("id2"), "left")
-        .select(col("id"),
-          least(col("component"), coalesce(col("nmin"), col("component"))).as("component"),
-          when(col("nmin") < col("component"), 1L).otherwise(0L).as("chg"))
-        .observe(obs, sum(col("chg")).as("changed"))
-        .select(col("id"), col("component"))
-      labels = next.localCheckpoint(true) // truncate the growing lineage
-      converged = obs.get("changed").asInstanceOf[Long] == 0L
+      // metric — one job per round, no second join-and-count; the
+      // checkpoint truncates the growing lineage
+      val (next, changed) = Materialize.observed(
+        labels.join(neighborMin, labels("id") === col("id2"), "left")
+          .select(col("id"),
+            least(col("component"), coalesce(col("nmin"), col("component"))).as("component"),
+            (col("nmin") < col("component")).as("chg")),
+        count_if(col("chg")).as("changed"))
+      labels = next.select(col("id"), col("component"))
+      converged = changed.getLong(0) == 0L
       iter += 1
     }
     if (!converged) throw new IllegalStateException(
@@ -287,18 +290,16 @@ object Graph {
           ed("src") === labels("id") && ed("dir") === labels("dir"))
         .groupBy(ed("dst").as("id2"), ed("dir").as("dir2"))
         .agg(min(col("lbl")).as("nmin"))
-      val obs = org.apache.spark.sql.Observation(s"mlb_changed_$iter")
-      val next = labels.join(neighborMin,
-          labels("id") === col("id2") && labels("dir") === col("dir2"), "left")
-        .select(labels("id"), labels("dir"),
-          least(col("lbl"), coalesce(col("nmin"), col("lbl"))).as("lbl"),
-          when(col("nmin") < col("lbl"), 1L).otherwise(0L).as("chg"))
-        .observe(obs, sum(col("chg")).as("changed"))
-        .select(col("id"), col("dir"), col("lbl"))
-      labels = next.localCheckpoint(true)
-      // sum over zero rows observes null (empty node set) — converged
-      converged = Option(obs.get("changed"))
-        .forall(_.asInstanceOf[Long] == 0L)
+      val (next, changed) = Materialize.observed(
+        labels.join(neighborMin,
+            labels("id") === col("id2") && labels("dir") === col("dir2"), "left")
+          .select(labels("id"), labels("dir"),
+            least(col("lbl"), coalesce(col("nmin"), col("lbl"))).as("lbl"),
+            (col("nmin") < col("lbl")).as("chg")),
+        count_if(col("chg")).as("changed"))
+      labels = next.select(col("id"), col("dir"), col("lbl"))
+      // zero rows (empty node set) observe 0 — converged
+      converged = changed.getLong(0) == 0L
       iter += 1
     }
     if (!converged) throw new IllegalStateException(
@@ -358,20 +359,19 @@ object Graph {
       val open = part.filter(col("f") =!= col("b"))
       val closed = part.filter(col("f") === col("b"))
       // edges whose endpoints share an OPEN class; closed SCCs are frozen
-      val er = e0
+      // feeds both directions of propagation
+      val (er, nEr) = Materialize.counted(e0
         .join(open.select(col("id").as("src"), col("f").as("sf"), col("b").as("sb")), "src")
         .join(open.select(col("id").as("dst"), col("f").as("df_"), col("b").as("db")), "dst")
         .filter(col("sf") === col("df_") && col("sb") === col("db"))
-        .select(col("src"), col("dst"))
-        .localCheckpoint(true) // feeds both directions of propagation
+        .select(col("src"), col("dst")))
       // below-threshold fast path (round 19, LocalSolve): once the
       // still-open subgraph fits one task, finish the refinement with
       // one in-task Tarjan pass — the same fixpoint (F = B = SCC min
       // id) without maxInner × maxOuter synchronization rounds. This is
       // the FW-BW tail at ANY scale: open classes shrink monotonically,
       // so production runs land here in late outer rounds too.
-      if (LocalSolve.allLong(er, "src", "dst") &&
-          LocalSolve.fits(er).isDefined) {
+      if (LocalSolve.allLong(er, "src", "dst") && LocalSolve.fits(nEr)) {
         val comp = LocalSolve.tarjanComponents(er)
           .select(col("id").as("cid"), col("component"))
         val refinedLocal = open
@@ -382,17 +382,15 @@ object Graph {
         part = closed.unionByName(refinedLocal).localCheckpoint(true)
         openCnt = 0L
       } else {
-      val obs = org.apache.spark.sql.Observation(s"scc_open_$outer")
       val refined =
         minLabelBothDirections(open.select(col("id")), er, maxInner)
-      val next = closed.unionByName(refined
-          .withColumn("open", when(col("f") =!= col("b"), 1L).otherwise(0L))
-          .observe(obs, sum(col("open")).as("n_open"))
-          .select(col("id"), col("f"), col("b")))
-      part = next.localCheckpoint(true)
-      // sum over zero rows observes null (empty node set) — nothing open
-      openCnt = Option(obs.get("n_open"))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
+      // closed rows have f = b, so counting f ≠ b over the union counts
+      // exactly the refined classes still open
+      val (next, nOpen) = Materialize.observed(
+        closed.unionByName(refined.select(col("id"), col("f"), col("b"))),
+        count_if(col("f") =!= col("b")).as("n_open"))
+      part = next
+      openCnt = nOpen.getLong(0)
       }
       outer += 1
     }
@@ -470,37 +468,35 @@ object Graph {
     * [[clusteringCoefficient]] convention).
     */
   def densestSubgraphTrace(edges: DataFrame, maxRounds: Int = 6): DataFrame = {
-    var e = canonical(edges).localCheckpoint(true)
+    var (e, m) = Materialize.counted(canonical(edges))
     // below-threshold fast path (round 19, LocalSolve): the whole
     // ≤ log₂ n-round peel trace in one task — identical integer
     // survivor predicate and m/n division.
-    if (LocalSolve.allLong(e, "a", "b") && LocalSolve.fits(e).isDefined)
+    if (LocalSolve.allLong(e, "a", "b") && LocalSolve.fits(m))
       return LocalSolve.densestTrace(e, maxRounds)
     var stats: Option[DataFrame] = None
     var r = 0
     var live = true
     while (live && r < maxRounds) {
-      val deg = e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
-        .groupBy(col("v")).agg(count(lit(1)).as("d"))
-        .localCheckpoint(true) // feeds counts, the round row and the peel
-      val nm = deg.agg(count(lit(1)).as("n"))
-        .crossJoin(e.agg(count(lit(1)).as("m")))
-      val Array(nRow) = nm.collect() // 1-row control scalar
-      val (n, m) = (nRow.getLong(0), nRow.getLong(1))
+      // feeds the round row and the peel; (n, m) are the round's control
+      // scalars, observed by the checkpoints that pin deg and e
+      val (deg, n) = Materialize.counted(
+        e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
+          .groupBy(col("v")).agg(count(lit(1)).as("d")))
       if (n == 0) { live = false }
       else {
-        val row = nm.select(lit(r.toLong).as("round"), col("n").as("n_nodes"),
-          col("m").as("n_edges"),
-          (col("m").cast("double") / col("n").cast("double")).as("density"))
+        val row = e.sparkSession.range(1).select(lit(r.toLong).as("round"),
+          lit(n).as("n_nodes"), lit(m).as("n_edges"),
+          (lit(m).cast("double") / lit(n).cast("double")).as("density"))
         stats = Some(stats.map(_.unionByName(row)).getOrElse(row))
-        val surv = deg.crossJoin(nm)
-          .filter(col("d") * col("n") > lit(4L) * col("m"))
+        val surv = deg.filter(col("d") * lit(n) > lit(4L) * lit(m))
           .select(col("v"))
-        e = e
+        val (next, mNext) = Materialize.counted(e
           .join(surv.select(col("v").as("a")), "a")
           .join(surv.select(col("v").as("b")), "b")
-          .select(col("a"), col("b"))
-          .localCheckpoint(true)
+          .select(col("a"), col("b")))
+        e = next
+        m = mNext
         r += 1
       }
     }
@@ -535,14 +531,14 @@ object Graph {
     */
   def hits(nodes: DataFrame, edges: DataFrame, iters: Int = 3): DataFrame = {
     val scale = 1000000L
-    val e = edges.toDF("src", "dst").filter(col("src") =!= col("dst"))
-      .distinct().localCheckpoint(true) // re-read every half-step
-    val ids = nodes.toDF("id").localCheckpoint(true)
+    val (e, nE) = Materialize.counted( // re-read every half-step
+      edges.toDF("src", "dst").filter(col("src") =!= col("dst")).distinct())
+    val (ids, nIds) = Materialize.counted(nodes.toDF("id"))
     // below-threshold fast path (round 19, LocalSolve): all 2·iters
     // half-steps in one task — identical fixed-point integer arithmetic
     // restricted to the node universe.
     if (LocalSolve.allLong(e, "src", "dst") && LocalSolve.allLong(ids, "id") &&
-        LocalSolve.fits(e).isDefined && LocalSolve.fits(ids).isDefined) {
+        LocalSolve.fits(nE) && LocalSolve.fits(nIds)) {
       return LocalSolve.hitsScores(
         e.select(lit(0).as("t"), col("src").as("x"), col("dst").as("y"))
           .unionByName(ids.select(lit(2).as("t"), col("id").as("x"),
@@ -594,14 +590,14 @@ object Graph {
     * authority, spam-distance gating). */
   def hopDistance(seeds: DataFrame, edges: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be ≥ 0, got $maxHops")
-    val e = edges.toDF("src", "dst").localCheckpoint(true)
-    var dist = seeds.toDF("id").distinct()
-      .select(col("id"), lit(0L).as("hops")).localCheckpoint(true)
+    val (e, nE) = Materialize.counted(edges.toDF("src", "dst"))
+    var (dist, nSeeds) = Materialize.counted(
+      seeds.toDF("id").distinct().select(col("id"), lit(0L).as("hops")))
     // below-threshold fast path (round 19, LocalSolve): the capped
     // multi-source BFS in one task.
     if (LocalSolve.allLong(e, "src", "dst") &&
         LocalSolve.allLong(dist, "id") &&
-        LocalSolve.fits(e).isDefined && LocalSolve.fits(dist).isDefined) {
+        LocalSolve.fits(nE) && LocalSolve.fits(nSeeds)) {
       return LocalSolve.hopBfs(
         e.select(lit(0).as("t"), col("src").as("x"), col("dst").as("y"))
           .unionByName(dist.select(lit(1).as("t"), col("id").as("x"),
@@ -620,14 +616,12 @@ object Graph {
       // an observed metric — no separate count job, so generous-bound
       // callers stop at the true eccentricity at zero extra cost and
       // tight-bound callers pay nothing either.
-      val obs = org.apache.spark.sql.Observation(s"hop_new_$h")
-      dist = dist.unionByName(next)
-        .groupBy(col("id")).agg(min(col("hops")).as("hops"))
-        .observe(obs,
-          sum(when(col("hops") === lit(h.toLong), 1L).otherwise(0L)).as("n"))
-        .localCheckpoint(true) // eager: populates the observation
-      growing = Option(obs.get("n"))
-        .map(_.asInstanceOf[Long]).getOrElse(0L) > 0L
+      val (merged, found) = Materialize.observed(
+        dist.unionByName(next)
+          .groupBy(col("id")).agg(min(col("hops")).as("hops")),
+        count_if(col("hops") === lit(h.toLong)).as("n"))
+      dist = merged
+      growing = found.getLong(0) > 0L
       h += 1
     }
     dist
@@ -666,18 +660,17 @@ object Graph {
     val e = edges.toDF("src", "dst")
     // dir=0: forward (src→dst, propagates f); dir=1: backward (dst→src,
     // propagates b). One relation, one join per round for both sweeps.
-    val ed = e.select(col("src"), col("dst"), lit(0).as("dir"))
-      .unionAll(e.select(col("dst").as("src"), col("src").as("dst"),
-        lit(1).as("dir")))
-      .localCheckpoint(true) // re-read every round
-    var state = seeds.toDF("id").distinct()
-      .select(col("id"), lit(true).as("f"), lit(true).as("b"))
-      .localCheckpoint(true)
+    val (ed, nEd) = Materialize.counted( // re-read every round
+      e.select(col("src"), col("dst"), lit(0).as("dir"))
+        .unionAll(e.select(col("dst").as("src"), col("src").as("dst"),
+          lit(1).as("dir"))))
+    var (state, nSeeds) = Materialize.counted(seeds.toDF("id").distinct()
+      .select(col("id"), lit(true).as("f"), lit(true).as("b")))
     // below-threshold fast path (round 19, LocalSolve): both BFS sweeps
     // in one task — same round budget and non-convergence throw.
     if (LocalSolve.allLong(ed, "src", "dst") &&
         LocalSolve.allLong(state, "id") &&
-        LocalSolve.fits(ed).isDefined && LocalSolve.fits(state).isDefined) {
+        LocalSolve.fits(nEd) && LocalSolve.fits(nSeeds)) {
       return LocalSolve.reachabilityFlags(
         ed.filter(col("dir") === 0)
           .select(lit(0).as("t"), col("src").as("x"), col("dst").as("y"))
@@ -700,26 +693,22 @@ object Graph {
         .filter(col("cf") || col("cb"))
         .groupBy(col("cid"))
         .agg(max(col("cf")).as("cf"), max(col("cb")).as("cb"))
-      val obs = org.apache.spark.sql.Observation(s"reach_new_$r")
-      val merged = state.join(cand, state("id") === col("cid"), "full_outer")
-        .select(coalesce(state("id"), col("cid")).as("id"),
-          (coalesce(state("f"), lit(false)) ||
-            coalesce(col("cf"), lit(false))).as("f"),
-          (coalesce(state("b"), lit(false)) ||
-            coalesce(col("cb"), lit(false))).as("b"),
-          (coalesce(col("cf"), lit(false)) &&
-            !coalesce(state("f"), lit(false))).as("nf"),
-          (coalesce(col("cb"), lit(false)) &&
-            !coalesce(state("b"), lit(false))).as("nb"))
-        .observe(obs,
-          sum(when(col("nf") || col("nb"), 1L).otherwise(0L)).as("n"))
-        .localCheckpoint(true) // eager: populates the observation
+      val (merged, found) = Materialize.observed(
+        state.join(cand, state("id") === col("cid"), "full_outer")
+          .select(coalesce(state("id"), col("cid")).as("id"),
+            (coalesce(state("f"), lit(false)) ||
+              coalesce(col("cf"), lit(false))).as("f"),
+            (coalesce(state("b"), lit(false)) ||
+              coalesce(col("cb"), lit(false))).as("b"),
+            (coalesce(col("cf"), lit(false)) &&
+              !coalesce(state("f"), lit(false))).as("nf"),
+            (coalesce(col("cb"), lit(false)) &&
+              !coalesce(state("b"), lit(false))).as("nb")),
+        count_if(col("nf") || col("nb")).as("n"))
       state = merged.select(col("id"), col("f"), col("b"))
       frontier = merged.filter(col("nf") || col("nb"))
         .select(col("id"), col("nf").as("f"), col("nb").as("b"))
-      // sum over zero rows observes null (nothing merged) — fixpoint
-      done = Option(obs.get("n"))
-        .map(_.asInstanceOf[Long]).getOrElse(0L) == 0L
+      done = found.getLong(0) == 0L
     }
     if (!done) throw new IllegalStateException(
       s"reachability frontier still growing after $maxRounds rounds")
@@ -754,16 +743,15 @@ object Graph {
   def shortestPaths(
       seeds: DataFrame, edges: DataFrame, maxRounds: Int): DataFrame = {
     require(maxRounds >= 0, s"maxRounds must be ≥ 0, got $maxRounds")
-    val e = edges.toDF("src", "dst", "w")
-      .select(col("src"), col("dst"), col("w").cast("long").as("w"))
-      .localCheckpoint(true)
-    var dist = seeds.toDF("id").distinct()
-      .select(col("id"), lit(0L).as("dist")).localCheckpoint(true)
+    val (e, nE) = Materialize.counted(edges.toDF("src", "dst", "w")
+      .select(col("src"), col("dst"), col("w").cast("long").as("w")))
+    var (dist, nSeeds) = Materialize.counted(
+      seeds.toDF("id").distinct().select(col("id"), lit(0L).as("dist")))
     // below-threshold fast path (round 19, LocalSolve): round-synchronous
     // Bellman–Ford in one task — identical ≤-maxRounds-edges semantics.
     if (LocalSolve.allLong(e, "src", "dst", "w") &&
         LocalSolve.allLong(dist, "id") &&
-        LocalSolve.fits(e).isDefined && LocalSolve.fits(dist).isDefined) {
+        LocalSolve.fits(nE) && LocalSolve.fits(nSeeds)) {
       return LocalSolve.bellmanFord(
         e.select(lit(0).as("t"), col("src").as("x"), col("dst").as("y"),
             col("w"))
@@ -788,16 +776,15 @@ object Graph {
       // one full-outer merge (cand may reach brand-new nodes); the
       // improvement count rides the merge job as an observed metric —
       // no second join-and-count (the connectedComponents pattern)
-      val obs = org.apache.spark.sql.Observation(s"sssp_improved_$r")
-      val merged = dist.join(cand, dist("id") === col("id2"), "full_outer")
-        .select(coalesce(dist("id"), col("id2")).as("id"),
-          least(dist("dist"), col("cdist")).as("dist"),
-          (dist("dist").isNull || col("cdist") < dist("dist")).as("imp"))
-        .observe(obs, sum(when(col("imp"), 1L).otherwise(0L)).as("n"))
-        .localCheckpoint(true)
+      val (merged, improved) = Materialize.observed(
+        dist.join(cand, dist("id") === col("id2"), "full_outer")
+          .select(coalesce(dist("id"), col("id2")).as("id"),
+            least(dist("dist"), col("cdist")).as("dist"),
+            (dist("dist").isNull || col("cdist") < dist("dist")).as("imp")),
+        count_if(col("imp")).as("n"))
       dist = merged.select(col("id"), col("dist"))
       frontier = merged.filter(col("imp")).select(col("id"), col("dist"))
-      converged = obs.get("n").asInstanceOf[Long] == 0L
+      converged = improved.getLong(0) == 0L
     }
     dist
   }
@@ -826,15 +813,15 @@ object Graph {
       nodes: DataFrame, seeds: DataFrame, edges: DataFrame,
       iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be ≥ 1, got $iters")
-    val e = edges.toDF("src", "dst").localCheckpoint(true)
-    val n = nodes.toDF("id").localCheckpoint(true)
-    val sd = seeds.toDF("id", "label").localCheckpoint(true)
+    val (e, nE) = Materialize.counted(edges.toDF("src", "dst"))
+    val (n, nNodes) = Materialize.counted(nodes.toDF("id"))
+    val (sd, nSeeds) = Materialize.counted(seeds.toDF("id", "label"))
     // below-threshold fast path (round 19, LocalSolve): all fixed
     // rounds in one task — identical vote/tiebreak/clamp semantics.
     if (LocalSolve.allLong(e, "src", "dst") && LocalSolve.allLong(n, "id") &&
         LocalSolve.allLong(sd, "id", "label") &&
-        LocalSolve.fits(e).isDefined && LocalSolve.fits(n).isDefined &&
-        LocalSolve.fits(sd).isDefined) {
+        LocalSolve.fits(nE) && LocalSolve.fits(nNodes) &&
+        LocalSolve.fits(nSeeds)) {
       return LocalSolve.labelProp(
         e.select(lit(0).as("t"), col("src").as("x"), col("dst").as("y"))
           .unionByName(sd.select(lit(1).as("t"), col("id").as("x"),
@@ -892,11 +879,10 @@ object Graph {
     * on src alone, and the node set it fed is a map-side
     * partial-aggregated distinct over the checkpoint (node-count-sized
     * shuffle, cheaper than the wider sort at every scale). */
-  private def weightedEdges(edges: DataFrame): DataFrame = {
+  private def weightedEdges(edges: DataFrame): (DataFrame, Long) = {
     val ws = org.apache.spark.sql.expressions.Window.partitionBy(col("src"))
-    edges.toDF("src", "dst")
-      .withColumn("w", lit(1.0) / count(lit(1)).over(ws))
-      .localCheckpoint()
+    Materialize.counted(edges.toDF("src", "dst")
+      .withColumn("w", lit(1.0) / count(lit(1)).over(ws)))
   }
 
   /** Node set of a [[weightedEdges]] relation: distinct srcs (every node
@@ -912,18 +898,16 @@ object Graph {
       damping: Double = 0.85,
       checkpointEvery: Int = 4): DataFrame = {
     require(iters >= 1, "need at least one iteration")
-    val ew = weightedEdges(edges)
+    val (ew, nEdges) = weightedEdges(edges)
     val nodes = rankNodes(ew)
     // seeds outside the graph carry no mass and don't dilute the rest
-    val sd = seeds.toDF("id").distinct()
-      .join(nodes, col("id") === col("nid"), "left_semi")
-      .localCheckpoint(true)
-    val nSeeds = sd.count()
+    val (sd, nSeeds) = Materialize.counted(seeds.toDF("id").distinct()
+      .join(nodes, col("id") === col("nid"), "left_semi"))
     require(nSeeds > 0, "no seed is a graph node — restart vector undefined")
     // below-threshold fast path (round 19, LocalSolve): all power
     // iterations in one task — see [[pageRank]]'s gate for the fixed
     // accumulation order / caller-rounding rationale.
-    if (LocalSolve.allLong(ew, "src", "dst") && LocalSolve.fits(ew).isDefined)
+    if (LocalSolve.allLong(ew, "src", "dst") && LocalSolve.fits(nEdges))
       return LocalSolve.pprLocal(
         ew.select(lit(0).as("t"), col("src").as("x"), col("dst").as("y"),
             col("w"))
@@ -977,14 +961,13 @@ object Graph {
     */
   def kCore(edges: DataFrame, k: Int, maxIter: Int = 50): DataFrame = {
     require(k >= 1, s"k must be ≥ 1, got $k")
-    val e = canonical(edges).localCheckpoint()
+    val (e, m) = Materialize.counted(canonical(edges))
     // below-threshold fast path (round 19, LocalSolve): the synchronous
     // peel in one task — identical fixpoint, maxIter contract kept.
-    if (LocalSolve.allLong(e, "a", "b") && LocalSolve.fits(e).isDefined)
+    if (LocalSolve.allLong(e, "a", "b") && LocalSolve.fits(m))
       return LocalSolve.kCorePeel(e, k, maxIter)
-    var live = e.select(col("a").as("n")).unionAll(e.select(col("b").as("n")))
-      .distinct().localCheckpoint(true)
-    var liveCount = live.count()
+    var (live, liveCount) = Materialize.counted(
+      e.select(col("a").as("n")).unionAll(e.select(col("b").as("n"))).distinct())
     var deg: DataFrame = null
     var converged = false
     var iter = 0
@@ -995,12 +978,11 @@ object Graph {
       deg = kept.select(col("a").as("n")).unionAll(kept.select(col("b").as("n")))
         .groupBy(col("n")).agg(count(lit(1)).as("core_degree"))
         .localCheckpoint(true)
-      val next = deg.filter(col("core_degree") >= k)
-        .select(col("n")).localCheckpoint(true)
       // isolated-by-peeling nodes vanish from deg entirely, so the
       // removed count must compare against the previous LIVE size —
       // carried over from last round's count, not recounted
-      val nextCount = next.count()
+      val (next, nextCount) = Materialize.counted(
+        deg.filter(col("core_degree") >= k).select(col("n")))
       converged = nextCount == liveCount
       live = next
       liveCount = nextCount
@@ -1042,7 +1024,7 @@ object Graph {
     */
   def harmonicCentrality(edges: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 1, s"maxHops must be ≥ 1, got $maxHops")
-    val e = edges.toDF("src", "dst").localCheckpoint(true)
+    val (e, m) = Materialize.counted(edges.toDF("src", "dst"))
     val lcm0 = (1 to maxHops).foldLeft(1L) { (a, b) =>
       @annotation.tailrec def gcd(x: Long, y: Long): Long =
         if (y == 0) x else gcd(y, x % y)
@@ -1053,9 +1035,7 @@ object Graph {
     // in-task work is Σ_source |ball| — super-linear in the edge count —
     // so one task only wins while the ball census stays small; the
     // distributed pair-state BFS takes over beyond it.
-    if (LocalSolve.allLong(e, "src", "dst") &&
-        LocalSolve.threshold(e.sparkSession) > 0 &&
-        e.count() <= math.min(LocalSolve.threshold(e.sparkSession), 1L << 16)) {
+    if (LocalSolve.allLong(e, "src", "dst") && LocalSolve.fits(m, 1L << 16)) {
       return LocalSolve.harmonicSums(e, maxHops, lcm0)
         .select(col("id"), col("reached"),
           (col("hsum").cast("double") / lcm0).as("harmonic"))
@@ -1123,7 +1103,7 @@ object Graph {
       edges: DataFrame, maxHops: Int,
       allowTruncation: Boolean = false): DataFrame = {
     require(maxHops >= 1, s"maxHops must be ≥ 1, got $maxHops")
-    val e = edges.toDF("src", "dst").localCheckpoint(true)
+    val (e, m) = Materialize.counted(edges.toDF("src", "dst"))
     // below-threshold fast path (round 19, LocalSolve): all register
     // rounds in one task — identical packed md5 registers, estimate
     // fold, convergence rule and truncation contract. Tighter cap than
@@ -1131,9 +1111,7 @@ object Graph {
     // in one task's heap, so it engages only while that stays ≤ ~256 MB
     // (≤ 2¹⁶ edges ⇒ ≤ 2¹⁷ endpoint nodes); production graphs take the
     // distributed register rounds unchanged.
-    if (LocalSolve.allLong(e, "src", "dst") &&
-        LocalSolve.threshold(e.sparkSession) > 0 &&
-        e.count() <= math.min(LocalSolve.threshold(e.sparkSession), 1L << 16)) {
+    if (LocalSolve.allLong(e, "src", "dst") && LocalSolve.fits(m, 1L << 16)) {
       return LocalSolve.hyperBallLocal(e, maxHops, allowTruncation)
     }
     // ball_0(v) = {v} for EVERY endpoint node — src ∪ dst, not src only
@@ -1248,8 +1226,8 @@ object Graph {
     // Edges in ZERO triangles vanish from the agg — i.e. they are
     // dropped in the same round (k ≥ 3 ⇒ threshold ≥ 1), the r16
     // behavior; keeping them an extra round costs a whole extra peel.
-    def withSupports(e: DataFrame): DataFrame =
-      trianglesCanonical(e)
+    def withSupports(e: DataFrame, m: Long): DataFrame =
+      trianglesCanonical(e, m)
         .select(explode(array(
           struct(col("n1").as("a"), col("n2").as("b")),
           struct(col("n1").as("a"), col("n3").as("b")),
@@ -1257,27 +1235,24 @@ object Graph {
         .groupBy(col("t.a").as("a"), col("t.b").as("b"))
         .agg(count(lit(1)).as("support"))
 
-    // one job per round refreshes BOTH loop controls from the pinned
-    // support relation; survivors/removed are then free complementary
-    // FILTERS over it (no anti-join, no second checkpoint)
-    def counts(sup: DataFrame): (Long, Long) = {
-      val r = sup.agg(count(lit(1)),
-        coalesce(sum(when(col("support") < thr, 1L)), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
+    // one job per round pins the support relation AND observes BOTH loop
+    // controls; survivors/removed are then free complementary FILTERS
+    // over it (no anti-join, no second checkpoint)
+    def pinned(sup: DataFrame): (DataFrame, Long, Long) = {
+      val (p, r) = Materialize.observed(sup, count(lit(1)).as("live"),
+        count_if(col("support") < thr).as("removed"))
+      (p, r.getLong(0), r.getLong(1))
     }
 
-    val e0 = canonical(edges).localCheckpoint(true)
+    val (e0, m0) = Materialize.counted(canonical(edges))
     // below-threshold fast path (round 19, LocalSolve): support
     // recompute + peel in one task (same vanish-at-zero-support and
     // maxIter semantics). Tighter cap than the shared default: the
     // in-task support pass is O(Σ min-degree per edge), super-linear in
     // edges, so one task only wins while the listing stays small.
-    if (LocalSolve.allLong(e0, "a", "b") &&
-        LocalSolve.threshold(e0.sparkSession) > 0 &&
-        e0.count() <= math.min(LocalSolve.threshold(e0.sparkSession), 1L << 20))
+    if (LocalSolve.allLong(e0, "a", "b") && LocalSolve.fits(m0, 1L << 20))
       return LocalSolve.kTrussPeel(e0, k, maxIter)
-    var live = withSupports(e0).localCheckpoint(true)
-    var (liveCount, removedCount) = counts(live)
+    var (live, liveCount, removedCount) = pinned(withSupports(e0, m0))
     // iter counts completed peel rounds: the loop admits rounds 1..maxIter
     // inclusive (the documented maxIter-rounds contract; `< maxIter` here
     // ran at most maxIter−1 and made maxIter=1 always throw — r17 advice)
@@ -1286,7 +1261,7 @@ object Graph {
       val survivors = live.filter(col("support") >= thr)
       val removed = live.filter(col("support") < thr)
         .select(col("a"), col("b"))
-      live =
+      val next =
         if (removedCount * 5L >= liveCount || liveCount < 200000L) {
           // MASS round (typically the first peel at high k, where most
           // edges die): the delta completion would enumerate nearly the
@@ -1306,8 +1281,8 @@ object Graph {
           // survivors is a filter over the CHECKPOINTED support relation,
           // so the listing's several scans of it re-read pinned blocks —
           // no extra eager materialization needed
-          withSupports(survivors.select(col("a"), col("b")))
-            .localCheckpoint(true)
+          withSupports(survivors.select(col("a"), col("b")),
+            liveCount - removedCount)
         } else {
           // DELTA round: re-list only triangles of the PREVIOUS graph
           // containing ≥1 removed edge. Probe from each removed edge's
@@ -1349,11 +1324,11 @@ object Graph {
             .join(dec, Seq("a", "b"), "left")
             .select(col("a"), col("b"),
               (col("support") - coalesce(col("d"), lit(0L))).as("support"))
-            .localCheckpoint(true)
         }
-      val c = counts(live)
-      liveCount = c._1
-      removedCount = c._2
+      val (p, nLive, nRemoved) = pinned(next)
+      live = p
+      liveCount = nLive
+      removedCount = nRemoved
       iter += 1
     }
     if (removedCount > 0) throw new IllegalStateException(
@@ -1381,18 +1356,18 @@ object Graph {
       damping: Double = 0.85,
       checkpointEvery: Int = 4): DataFrame = {
     require(iters >= 1, "need at least one iteration")
-    val ew = weightedEdges(edges)
+    val (ew, nEdges) = weightedEdges(edges)
     // below-threshold fast path (round 19, LocalSolve): all power
     // iterations in one task. Per-dst contributions accumulate in a
     // FIXED (dst, src) order — within float-ulp of the distributed
     // partial aggregation's partition-dependent order, absorbed by the
     // r4 rounding every caller applies (the same contract the
     // distributed path's own run-to-run variance already rides on).
-    if (LocalSolve.allLong(ew, "src", "dst") && LocalSolve.fits(ew).isDefined)
+    if (LocalSolve.allLong(ew, "src", "dst") && LocalSolve.fits(nEdges))
       return LocalSolve.pageRankLocal(ew, iters, damping)
-    val nodes = rankNodes(ew)
-      .localCheckpoint(true) // node-count-sized; read twice per round
-    val n = nodes.count() // every node has an out-edge → src carries all nodes
+    // node-count-sized; read twice per round. Every node has an out-edge,
+    // so src carries all nodes
+    val (nodes, n) = Materialize.counted(rankNodes(ew))
     var ranks = nodes.select(col("nid").as("id"), lit(1.0 / n).as("pr"))
     for (i <- 1 to iters) {
       // left join back onto the node set: a node with no IN-edges still
@@ -1456,15 +1431,14 @@ object Graph {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("src")).orderBy(col("dst"))
     val wd = org.apache.spark.sql.expressions.Window.partitionBy(col("src"))
-    val adj = edges.toDF("src", "dst")
-      .withColumn("rk", row_number().over(w))
-      .withColumn("deg", count(lit(1)).over(wd)) // shares rk's shuffle
-      .localCheckpoint() // reused by every hop below
+    val (adj, nAdj) = Materialize.counted( // reused by every hop below
+      edges.toDF("src", "dst")
+        .withColumn("rk", row_number().over(w))
+        .withColumn("deg", count(lit(1)).over(wd))) // shares rk's shuffle
     // below-threshold fast path (round 19, LocalSolve): every hop's two
     // equi-joins + the step union in one task — identical md5 choice
     // lane, identical dst-sorted ranks, walks stop at dead ends alike.
-    if (LocalSolve.allLong(adj, "src", "dst") &&
-        LocalSolve.fits(adj).isDefined) {
+    if (LocalSolve.allLong(adj, "src", "dst") && LocalSolve.fits(nAdj)) {
       val st = starts.toDF("walk_id", "node")
       if (LocalSolve.allLong(st, "walk_id", "node")) {
         return LocalSolve.randomWalksLocal(
@@ -1526,10 +1500,10 @@ object Graph {
     * overflows past ~2⁶³ only for graphs with both ≳10¹² edges and
     * ≳10⁶-degree hubs — switch to DECIMAL there. */
   def louvainMove(edges: DataFrame, assign: DataFrame): DataFrame = {
-    val e = edges.toDF("src", "dst").localCheckpoint()
+    val (e, nE) = Materialize.counted(edges.toDF("src", "dst"))
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("k"))
       .select(col("src").as("node"), col("k"))
-    louvainSweep(e, deg, e.count() / 2, assign.toDF("node", "cid"))
+    louvainSweep(e, deg, nE / 2, assign.toDF("node", "cid"))
   }
 
   /** [[louvainMove]] iterated `rounds` times from singleton communities —
@@ -1538,14 +1512,14 @@ object Graph {
     * per sweep: measured 4.7 s vs 3.5 s for two rounds at sf0.1). */
   def louvain(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, "need at least one round")
-    val e = edges.toDF("src", "dst").localCheckpoint()
+    val (e, nE) = Materialize.counted(edges.toDF("src", "dst"))
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("k"))
       .select(col("src").as("node"), col("k"))
       .localCheckpoint()
-    val m = e.count() / 2
+    val m = nE / 2
     // below-threshold fast path (round 19, LocalSolve): all sweeps in
     // one task — identical exact-integer score and tiebreak.
-    if (LocalSolve.allLong(e, "src", "dst") && LocalSolve.fits(e).isDefined)
+    if (LocalSolve.allLong(e, "src", "dst") && LocalSolve.fits(nE))
       return LocalSolve.louvainSweeps(e, m, rounds)
     var a = deg.select(col("node"), col("node").as("cid"))
     for (_ <- 1 to rounds)
@@ -1628,19 +1602,20 @@ object Graph {
       q: Double): DataFrame = {
     require(steps >= 1, "need at least one step")
     // one shuffle total: node → sorted neighbor array, reused every hop
-    val nbrs = edges.toDF("src", "dst")
-      .groupBy(col("src")).agg(sort_array(collect_list(col("dst"))).as("nb"))
-      .select(col("src").as("node"), col("nb"))
-      .localCheckpoint()
+    val (nbrs, sizes) = Materialize.observed(edges.toDF("src", "dst")
+        .groupBy(col("src")).agg(sort_array(collect_list(col("dst"))).as("nb"))
+        .select(col("src").as("node"), col("nb")),
+      coalesce(sum(size(col("nb")).cast("long")), lit(0L)).as("edges"))
     // below-threshold fast path (round 19, LocalSolve): all hops in one
     // task — identical md5₆₀ inverse-CDF picks and IEEE fold order. The
-    // gate sums neighbor-array sizes (= edge count) over the checkpoint;
-    // the kernel re-derives the edge list by exploding the SAME
-    // checkpointed arrays (a scan, no second upstream pass).
+    // gate reads the neighbor-array size sum (= edge count) the
+    // checkpoint observed; the kernel re-derives the edge list by
+    // exploding the SAME checkpointed arrays (a scan, no second
+    // upstream pass).
     if (LocalSolve.allLong(starts.toDF("walk_id", "node"), "walk_id", "node") &&
         nbrs.schema("node").dataType ==
           org.apache.spark.sql.types.LongType &&
-        LocalSolve.fitsSum(nbrs, size(col("nb")).cast("long")).isDefined) {
+        LocalSolve.fits(sizes.getLong(0))) {
       return LocalSolve.node2vecLocal(
         nbrs.select(lit(0).as("t"), col("node").as("x"),
             explode(col("nb")).as("y"))
@@ -1733,12 +1708,12 @@ object Graph {
   def lubyMis(
       nodes: DataFrame, edges: DataFrame, maxRounds: Int): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val und = undirected(edges).localCheckpoint(true)
-    val all = nodes.toDF("id").distinct().localCheckpoint(true)
+    val (und, nUnd) = Materialize.counted(undirected(edges))
+    val (all, nAll) = Materialize.counted(nodes.toDF("id").distinct())
     // below-threshold fast path (round 19, LocalSolve): all Luby rounds
     // in one task — identical md5 priorities, win rule and round budget.
     if (LocalSolve.allLong(und, "src", "dst") && LocalSolve.allLong(all, "id") &&
-        LocalSolve.fits(und).isDefined && LocalSolve.fits(all).isDefined) {
+        LocalSolve.fits(nUnd) && LocalSolve.fits(nAll)) {
       return LocalSolve.lubyMisLocal(
         und.select(lit(0).as("t"), col("src").as("x"), col("dst").as("y"))
           .unionByName(all.select(lit(2).as("t"), col("id").as("x"),

@@ -17,9 +17,9 @@ import scala.collection.mutable
   * 4 373-edge graph: 10 inner rounds × fixed round overhead, zero bytes
   * of real work). When the edge relation is small enough to fit one
   * task's working set, the exact same fixpoint is a sub-millisecond
-  * in-memory computation — so each loop gates on the (already
-  * checkpointed, hence cheap-to-count) edge count and, below the
-  * threshold, runs its fixpoint inside ONE `mapPartitions` task on an
+  * in-memory computation — so each loop gates on the edge count its
+  * checkpoint already observed and, below the threshold, runs its
+  * fixpoint inside ONE `mapPartitions` task on an
   * executor instead of N synchronized rounds. This is the standard
   * hybrid of production graph engines, and it is NOT a local-mode-only
   * trick: at cluster scale the FW-BW open remainder, the CC
@@ -38,47 +38,34 @@ import scala.collection.mutable
   * executor task (`coalesce(1).mapPartitions`), and the output flows
   * back as a DataFrame into the same downstream joins.
   *
-  * Gating: `spark.graft.graph.localSolveEdges` (default 4 194 304 ≈ one
-  * task's comfortable working set of (long, long) pairs; 0 disables —
-  * the distributed paths are untouched and remain the ≥-threshold
-  * route). The gate only engages when every graph column is LongType
-  * (all graft callers; anything else falls through to the distributed
-  * path untouched).
+  * Gating: one threshold for every kernel of the tier (graph, text, kNN,
+  * density, suffix arrays), `spark.graft.graph.localSolveEdges` (default
+  * 4 194 304 ≈ one task's comfortable working set of (long, long) pairs;
+  * 0 disables the tier — the distributed paths are untouched and remain
+  * the ≥-threshold route). Each gate is the job-free predicate [[fits]]
+  * over the row count (or size sum) its caller's [[graft.ops.Materialize]]
+  * checkpoint observed; super-linear kernels pass a tighter constant cap.
+  * Graph gates engage only when every graph column is LongType (all graft
+  * callers; anything else takes the distributed path). [[fitsBounded]]
+  * is the one counting probe, for inputs nobody pins (a corpus must not
+  * be materialized just to be sized).
   */
 private[graft] object LocalSolve {
 
-  def threshold(spark: SparkSession): Long =
+  private def threshold(spark: SparkSession): Long =
     spark.conf.getOption("spark.graft.graph.localSolveEdges")
       .map(_.toLong).getOrElse(1L << 22)
 
-  /** The relation must be materialized (checkpointed) by the caller so
-    * this count is a cheap scan, not a recompute. Returns None when the
-    * local path is disabled or the relation is over-threshold. */
-  def fits(df: DataFrame): Option[Long] = {
-    val thr = threshold(df.sparkSession)
-    if (thr <= 0L) None
-    else {
-      val n = df.count()
-      if (n <= thr) Some(n) else None
-    }
+  /** The gate: true when the tier is on and `rows` (a row count, or the
+    * work units of a kernel whose work is not its row count) ≤
+    * min(threshold, `cap`). Runs no job. */
+  def fits(rows: Long, cap: Long = Long.MaxValue): Boolean = {
+    val thr = threshold(SparkSession.active)
+    thr > 0L && rows <= math.min(thr, cap)
   }
 
   def allLong(df: DataFrame, cols: String*): Boolean =
     cols.forall(c => df.schema(c).dataType == LongType)
-
-  /** [[fits]] for relations whose per-row weight varies (e.g. a packed
-    * neighbor-array relation where the work is Σ array sizes, not the
-    * row count): compares `sum(sizeExpr)` over the (checkpointed)
-    * relation against the threshold. One cheap scan job. */
-  def fitsSum(df: DataFrame, sizeExpr: org.apache.spark.sql.Column): Option[Long] = {
-    val thr = threshold(df.sparkSession)
-    if (thr <= 0L) None
-    else {
-      val n = Option(df.agg(org.apache.spark.sql.functions.sum(sizeExpr))
-        .head.get(0)).map(_.asInstanceOf[Long]).getOrElse(0L)
-      if (n <= thr) Some(n) else None
-    }
-  }
 
   /** Portable 60-bit md5 lane — conv(substring(md5(s), 1, 15), 16, 10)
     * verbatim (the repo-wide choice-hash convention): first 15 hex chars
@@ -1358,10 +1345,10 @@ private[graft] object LocalSolve {
 
   // ---------------------------------------------------- kNN / GNN tier
 
-  /** [[fits]] with a LIMIT-bounded count: scans at most cap+1 rows, so
-    * the gate itself never pays a full pass over a production-sized
+  /** The gate for an input nobody pins: a LIMIT-bounded count scanning at
+    * most cap+1 rows, so it never pays a full pass over a production-sized
     * relation (the knnJoinExact corpus can be the whole corpus). Returns
-    * the exact count when it is ≤ cap, None otherwise. */
+    * the exact count when [[fits]] passes it with `cap`, None otherwise. */
   def fitsBounded(df: DataFrame, cap: Long): Option[Long] = {
     if (threshold(df.sparkSession) <= 0L) return None
     val c = math.min(cap, threshold(df.sparkSession))

@@ -33,21 +33,15 @@ import scala.collection.mutable.ArrayBuffer
   *
   * Replies over a kept-alive connection need TCP_NODELAY: the JDK server
   * writes a reply's headers and body as separate packets, and with Nagle's
-  * algorithm on the body waits for the client's delayed ACK (~40 ms). So
-  * constructing an endpoint sets the system property
-  * `sun.net.httpserver.nodelay=true` unless it is already set. The property
-  * is JVM-wide and the JDK reads it once, at the JVM's first
-  * `HttpServer.create`: it then holds for every JDK server in the process,
-  * and has no effect if another component created one before.
+  * algorithm on the body waits for the client's delayed ACK (~40 ms). The
+  * JDK reads the JVM-wide property `sun.net.httpserver.nodelay` once, at
+  * the process's first `HttpServer.create`, so [[graft.GraftSession]]
+  * sets it to true (unless already set) when it configures the session,
+  * before any JDK server in the process can exist.
   */
 final class HttpEndpoint(spark: SparkSession, host: String = "127.0.0.1", port: Int = 0) {
 
-  private val server = {
-    // TCP_NODELAY for kept-alive replies (see the class doc); a user's
-    // setting wins.
-    System.getProperties.putIfAbsent("sun.net.httpserver.nodelay", "true")
-    HttpServer.create(new InetSocketAddress(host, port), 0)
-  }
+  private val server = HttpServer.create(new InetSocketAddress(host, port), 0)
   private val log = ArrayBuffer.empty[(Long, String, String, String)]
 
   def actualPort: Int = server.getAddress.getPort

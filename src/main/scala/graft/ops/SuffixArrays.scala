@@ -112,11 +112,10 @@ object SuffixArrays {
     val docs = df
       .select(col(idCol).as("id"), substring(col(textCol), 1, cap).as("t"))
       .filter(length(col("t")) >= 1)
-    val chars = docs
+    val (chars, nChars) = Materialize.counted(docs
       .select(col("id"), posexplode(split(col("t"), "")))
       .toDF("id", "pos0", "ch")
-      .select(col("id"), (col("pos0") + 1).cast("long").as("pos"), col("ch"))
-      .localCheckpoint(true)
+      .select(col("id"), (col("pos0") + 1).cast("long").as("pos"), col("ch")))
     // seed rank: broadcast alphabet table (bounded by charset size),
     // never a global window. The collect is alphabet-bounded for TEXT
     // (≤ the Unicode codespace, in practice a few hundred chars); guard
@@ -138,19 +137,15 @@ object SuffixArrays {
           StructField("id", LongType, nullable = false),
           StructField("pos", LongType, nullable = false),
           StructField("gsa_rank", LongType, nullable = false))))
-    // below-threshold fast path (round 19): the whole prefix-doubling
-    // fixpoint equals "order by (seed-ranked suffix with end sentinel
-    // below every rank, id, pos)" — when the character relation fits one
-    // task (`spark.graft.suffix.localSolveChars`, default 4 194 304;
-    // 0 disables), compute that order directly inside ONE mapPartitions
-    // task instead of log₂(cap) rounds × (window shuffle + range
-    // exchange + count collect + assign pass). Seed ranks come from the
-    // SAME driver-sorted alphabet, so the comparator is bit-identical to
-    // the distributed rounds for any input.
-    val localThr = spark.conf
-      .getOption("spark.graft.suffix.localSolveChars")
-      .map(_.toLong).getOrElse(1L << 22)
-    if (localThr > 0 && chars.count() <= localThr) {
+    // below-threshold fast path (round 19, LocalSolve): the whole
+    // prefix-doubling fixpoint equals "order by (seed-ranked suffix with
+    // end sentinel below every rank, id, pos)" — when the observed char
+    // count passes the tier's one gate, compute that order inside ONE
+    // mapPartitions task instead of log₂(cap) rounds × (window shuffle +
+    // range exchange + count collect + assign pass). Seed ranks come from
+    // the SAME driver-sorted alphabet, so the comparator is bit-identical
+    // to the distributed rounds for any input.
+    if (graft.graph.LocalSolve.fits(nChars)) {
       val alphaMap = alphabet.toMap
       val ranked = chars
         .select(col("id"), col("pos"), col("ch"))

@@ -497,8 +497,8 @@ object Ann {
     require(k >= 1 && rounds >= 0 && nlist >= 0 && ringNeighbors >= 1,
       "bad nnDescent params")
     import graft.plans.TopKByScore.topkByScore
-    val v = df.select(col(idCol).as("id"),
-      col(vecCol).as("vec")).localCheckpoint(true)
+    val (v, n) = graft.ops.Materialize.counted(
+      df.select(col(idCol).as("id"), col(vecCol).as("vec")))
 
     // below-threshold fast path (round 19, LocalSolve): seed assignment,
     // ring, and every local-join round in one task — identical centroid
@@ -510,21 +510,18 @@ object Ann {
     // vector cap; rounds-work is O(n·(2k)²), dominated by the seed term.
     locally {
       import graft.graph.LocalSolve
-      if (LocalSolve.threshold(v.sparkSession) > 0 &&
-          v.schema("id").dataType == org.apache.spark.sql.types.LongType) {
-        val n = v.count()
-        val kk0 =
-          if (nlist > 0) nlist
-          else math.max(1, math.ceil(math.sqrt(n.toDouble)).toInt)
-        if (n <= math.min(LocalSolve.threshold(v.sparkSession), 1L << 13) &&
-            n.toDouble * n / kk0 <= (1L << 19).toDouble) {
-          val out = LocalSolve.nnDescentLocal(
-            v.select(col("id"), col("vec").cast("array<double>").as("vec")),
-            k, rounds, nlist, ringNeighbors)
-          return (0 to rounds).map { r =>
-            out.filter(col("round") === r.toLong)
-              .select(col("src"), col("dst"), col("cos"), col("rk"))
-          }
+      val kk0 =
+        if (nlist > 0) nlist
+        else math.max(1, math.ceil(math.sqrt(n.toDouble)).toInt)
+      if (v.schema("id").dataType == org.apache.spark.sql.types.LongType &&
+          LocalSolve.fits(n, 1L << 13) &&
+          n.toDouble * n / kk0 <= (1L << 19).toDouble) {
+        val out = LocalSolve.nnDescentLocal(
+          v.select(col("id"), col("vec").cast("array<double>").as("vec")),
+          k, rounds, nlist, ringNeighbors)
+        return (0 to rounds).map { r =>
+          out.filter(col("round") === r.toLong)
+            .select(col("src"), col("dst"), col("cos"), col("rk"))
         }
       }
     }
@@ -610,19 +607,17 @@ object Ann {
   def mmrRerank(
       pool: DataFrame, idCol: String, vecCol: String, relCol: String,
       k: Int, lam: Double, mu: Double): DataFrame = {
-    val p = pool
-      .select(col(idCol).as("id"), col(vecCol).as("vec"), col(relCol).as("rel"))
-      .localCheckpoint(true) // shortlist: read by sims and every step
+    // shortlist: read by sims and every step
+    val (p, nPool) = graft.ops.Materialize.counted(
+      pool.select(col(idCol).as("id"), col(vecCol).as("vec"), col(relCol).as("rel")))
     // below-threshold fast path (round 19, LocalSolve): the whole greedy
     // recurrence in one task — k orderBy-limit(1) jobs collapse to one.
     // Shortlists are display-page-sized by contract; the cap guards the
     // |pool|² sims matrix. Long ids + double rel only, so the gated
     // output's schema AND values match the distributed path exactly.
-    if (graft.graph.LocalSolve.threshold(p.sparkSession) > 0 &&
-        p.schema("id").dataType == org.apache.spark.sql.types.LongType &&
+    if (p.schema("id").dataType == org.apache.spark.sql.types.LongType &&
         p.schema("rel").dataType == org.apache.spark.sql.types.DoubleType &&
-        p.count() <= math.min(
-          graft.graph.LocalSolve.threshold(p.sparkSession), 1L << 12)) {
+        graft.graph.LocalSolve.fits(nPool, 1L << 12)) {
       return graft.graph.LocalSolve.mmrLocal(
         p.select(col("id"), col("vec").cast("array<double>").as("vec"),
           col("rel")), k, lam, mu)

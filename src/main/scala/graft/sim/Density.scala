@@ -45,12 +45,12 @@ object Density {
   def dbscan(
       points: DataFrame, idCol: String, xCol: String, yCol: String,
       eps: Double, minPts: Int, maxIter: Int = 50): DataFrame = {
-    val p = points
+    // pinned: probe side, build side, noise remainder
+    val (p, n) = graft.ops.Materialize.counted(points
       .select(col(idCol).cast("long").as("id"),
         col(xCol).cast("double").as("x"), col(yCol).cast("double").as("y"))
       .withColumn("cx", floor(col("x") / eps).cast("long"))
-      .withColumn("cy", floor(col("y") / eps).cast("long"))
-      .localCheckpoint(true) // probe side, build side, noise remainder
+      .withColumn("cy", floor(col("y") / eps).cast("long")))
 
     // below-threshold fast path (round 19, LocalSolve): the whole
     // pipeline — 9-cell probe pairs, core cut, core-core min-label CC
@@ -58,9 +58,7 @@ object Density {
     // task with bit-identical arithmetic. Work is the candidate-pair
     // volume, bounded by the same density assumption the distributed
     // probe rides on, so the gate is the point count.
-    if (graft.graph.LocalSolve.threshold(p.sparkSession) > 0 &&
-        p.count() <= math.min(
-          graft.graph.LocalSolve.threshold(p.sparkSession), 1L << 20)) {
+    if (graft.graph.LocalSolve.fits(n, 1L << 20)) {
       return graft.graph.LocalSolve.dbscanLocal(p, eps, minPts, maxIter)
     }
 

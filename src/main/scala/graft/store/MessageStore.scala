@@ -3,6 +3,7 @@ package graft.store
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{DateType, StructType}
 
 /** Message-store search — graft's `MessageStore.search` (reference:
   * pypeman/msgstore.py:174 and the meta filter/sort semantics at
@@ -101,11 +102,13 @@ final case class Search(
   *
   * Reads resolve the store once per version, so a warm read costs only the
   * query's own Spark job:
-  *   - the base table's schema (with `day`) is inferred by the first read
-  *     and kept; later reads pass it to the scan, which skips the inference
-  *     job. Without `mergeSchema` Spark already takes one footer's schema
-  *     for the whole table. A compact, or a read that finds the store
-  *     empty, drops the kept schema.
+  *   - the base table's schema (with `day`) is kept; reads pass it to the
+  *     scan, which skips the inference job. The first `save` into a store
+  *     without base data seeds it with what inference would report (the
+  *     written schema, every field nullable, then `day: date`); otherwise
+  *     the first read infers and keeps it. Without `mergeSchema` Spark
+  *     already takes one footer's schema for the whole table. A compact,
+  *     or a read that finds the store empty, drops the kept schema.
   *   - the mutation log is read on the driver by parquet's own reader and
   *     folded into the set of tombstoned uuids and each other uuid's
   *     highest-`seq` state, kept under the log's listing: the sorted (file
@@ -155,11 +158,16 @@ final class MessageStore(
     * every stored message pending at store time (msgstore.py:630) — so the
     * table schema stays uniform across appends. */
   def save(msgs: DataFrame): Unit = {
+    val seed = !baseExists
     val withState =
       if (msgs.columns.contains("state")) msgs
       else msgs.withColumn("state", lit(graft.model.Msg.PENDING))
-    withState.withColumn("day", to_date(col("ts")))
-      .write.mode("append").partitionBy("day").parquet(path)
+    val rows = withState.withColumn("day", to_date(col("ts")))
+    rows.write.mode("append").partitionBy("day").parquet(path)
+    // the first write into a store without base data keeps the schema a
+    // read would infer, so that read runs no inference job
+    if (seed) baseSchema = Some(ColumnBridge.asNullable(
+      StructType(rows.schema.filterNot(_.name == "day"))).add("day", DateType))
   }
 
   /** Streaming append into the store (exactly-once via checkpoint) — the
@@ -188,8 +196,10 @@ final class MessageStore(
     }
   }
 
-  /** Base-table schema kept from the first read (see the class doc). */
-  @volatile private var baseSchema: Option[org.apache.spark.sql.types.StructType] = None
+  /** Base-table schema kept from the seeding save or the first read (see
+    * the class doc). */
+  @volatile private var baseSchema: Option[StructType] = None
+  private[graft] def keptSchema: Option[StructType] = baseSchema
 
   /** The reconciled store, or None for the empty store. */
   private def current(): Option[DataFrame] =

@@ -2,7 +2,8 @@ package graft.store
 
 import graft.api.{Channel, ChannelResult}
 import graft.model.Msg
-import org.apache.spark.sql.{DataFrame, Observation}
+import graft.ops.Materialize
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -26,9 +27,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * trigger for the deployed form. Each round is O(parked) — the retry
   * store holds failures only, never the corpus.
   *
-  * Job shape: every merged group is materialized once per round by an
-  * eager `localCheckpoint` whose observed row count drops the empty
-  * groups (the pattern of `Graph.connectedComponents`), so a round costs
+  * Job shape: every merged group is materialized once per round by
+  * `Materialize.counted`, whose observed row count drops the empty
+  * groups (the pattern of the LocalSolve gates), so a round costs
   * one Spark job per group and no separate emptiness probe; the same
   * checkpoint truncates the lineage per round. A 3-round loop over one
   * node's park runs 4 jobs: the initial grouping and one per round.
@@ -42,18 +43,16 @@ object RetryDriver {
     * retry.py:185 search(order_by="timestamp")). */
   final case class RetryResult(states: DataFrame, rounds: Int)
 
-  /** Merge per-node groups, materialize each one and drop the empty ones
-    * (a channel emits a retries entry for EVERY autoRetryOn node, incl.
-    * ones nothing reached). The row count is observed on the checkpoint's
-    * own job — parked sets hold failures only, never the corpus, so the
-    * checkpoint stays scalar-sized. */
+  /** Merge per-node groups, materialize each one with
+    * [[graft.ops.Materialize.counted]] and drop the empty ones (a channel
+    * emits a retries entry for EVERY autoRetryOn node, incl. ones nothing
+    * reached): the row count rides the checkpoint's own job. Parked sets
+    * hold failures only, never the corpus, so the checkpoint stays
+    * scalar-sized. */
   private def group(rs: Seq[(String, DataFrame)]): Seq[(String, DataFrame)] =
     rs.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (n, ds) =>
-      val obs = Observation()
-      val df = ds.map(_._2).reduce(_ unionByName _)
-        .observe(obs, count(lit(1)).as("rows"))
-        .localCheckpoint(true)
-      if (obs.get("rows").asInstanceOf[Long] == 0L) None else Some(n -> df)
+      val (df, rows) = Materialize.counted(ds.map(_._2).reduce(_ unionByName _))
+      if (rows == 0L) None else Some(n -> df)
     }
 
   /** Flatten channel retries into the persisted park layout `periodic`

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, InSet}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, ExpressionUtils, SparkSession => ClassicSparkSession}
 import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 import java.util.concurrent.atomic.AtomicLong
 
@@ -22,6 +23,10 @@ object ColumnBridge {
     * tens of thousands of values. */
   def inSet(c: Column, values: Set[String]): Column =
     column(InSet(expression(c), values.map(UTF8String.fromString)))
+
+  /** `s` with every nested field nullable: the schema a file read reports
+    * for data written as `s`. */
+  def asNullable(s: StructType): StructType = s.asNullable
 
   /** DataFrame over a custom LogicalPlan (for operators that introduce
     * their own plan nodes, e.g. the native as-of join). */

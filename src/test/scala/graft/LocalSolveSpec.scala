@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.DataFrame
 
 /** Round-19 optimization: the below-threshold one-task solvers
@@ -321,6 +323,48 @@ class LocalSolveSpec extends SparkSpec {
     val (l, d) = bothPaths(
       graft.sim.Density.dbscan(pts, "id", "x", "y", eps = 0.75, minPts = 4))
     assert(l == d && l.nonEmpty)
+  }
+
+  test("globalSuffixRanks: local == distributed (ties, shared prefixes, cap)") {
+    // repeated texts tie until (id, pos); runs and shared prefixes make
+    // the distributed prefix doubling take several rounds; cap = 7 cuts
+    // the longest docs so their truncated tails tie with shorter docs
+    val docs = Seq(
+      (1L, "banana"), (2L, "ana"), (3L, "banana"), (4L, "bananas"),
+      (5L, "aaaaaaaaa"), (6L, "aa"), (7L, "abababab"), (8L, "abab"),
+      (9L, "nanana"), (10L, "ab ba"), (11L, "ümlaut"), (12L, "b")
+    ).toDF("id", "t")
+    val (l, d) = bothPaths(
+      graft.ops.SuffixArrays.globalSuffixRanks(docs, "id", "t", cap = 7))
+    assert(l == d && l.size == docs.collect().map(r => math.min(r.getString(1).length, 7)).sum)
+  }
+
+  test("gates read the checkpoint's count: connectedComponents and globalSuffixRanks job counts") {
+    spark.conf.unset("spark.graft.graph.localSolveEdges")
+    // file-backed inputs read BEFORE the counted block: a toDF fixture is a
+    // LocalRelation, and a parquet read inside the block would add its
+    // schema-inference job
+    val dir = Files.createTempDirectory("graft_gate_jobs").toString
+    (2L to 3000L).map(i => (i, i / 2)).toDF("src", "dst").write.parquet(s"$dir/tree")
+    (1L to 3000L).toDF("id").write.parquet(s"$dir/nodes")
+    (1 to 200).map(i => (i.toLong, s"doc${i % 17} ab${"c" * (i % 5)}ab")).toDF("id", "t")
+      .write.parquet(s"$dir/docs")
+    val nodes = spark.read.parquet(s"$dir/nodes")
+    val tree = spark.read.parquet(s"$dir/tree")
+    val docs = spark.read.parquet(s"$dir/docs")
+    // a tree is one component: the min id labels every node
+    val (plain, plainJobs) = JobCount(spark)(graft.graph.Graph.connectedComponents(nodes, tree))
+    val (_, distinctJobs) =
+      JobCount(spark)(graft.graph.Graph.connectedComponents(nodes, tree.distinct()))
+    val (ranks, suffixJobs) =
+      JobCount(spark)(graft.ops.SuffixArrays.globalSuffixRanks(docs, "id", "t", 64))
+    // edge checkpoint + node checkpoint + kernel; distinct() adds its shuffle
+    assert(plainJobs == 3, s"connectedComponents ran $plainJobs Spark jobs")
+    assert(distinctJobs == 4, s"connectedComponents over distinct() edges ran $distinctJobs Spark jobs")
+    // char checkpoint + alphabet (2, its distinct shuffles) + kernel
+    assert(suffixJobs == 4, s"globalSuffixRanks ran $suffixJobs Spark jobs")
+    assert(plain.select("component").distinct().collect().map(_.getLong(0)).toSeq == Seq(1L))
+    assert(ranks.count() == docs.collect().map(_.getString(1).length.toLong).sum)
   }
 
   test("hyperBall truncation contract throws on the local path too") {

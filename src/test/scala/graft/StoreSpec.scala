@@ -412,6 +412,47 @@ class StoreSpec extends SparkSpec {
       Map("a" -> "pending", "b" -> "error", "c" -> "pending"))
   }
 
+  test("MessageStore (parquet): the first save seeds the schema a read infers, so that read runs no job") {
+    val dir = Files.createTempDirectory("graft_store_seed").toString
+    val store = new MessageStore(spark, s"$dir/msgs")
+    // non-nullable columns, nested struct/array/map fields and a caller-set state
+    val batch = msgs
+      .withColumn("attempt", lit(0L))
+      .withColumn("tags", array(lit("x"), lit("y")))
+      .withColumn("ctx", struct(lit(1).as("n"), map(lit("k"), lit(2.5)).as("m"),
+        array(struct(lit("v").as("s"))).as("xs")))
+      .withColumn("state", lit("pending"))
+    assert(store.keptSchema.isEmpty)
+    store.save(batch)
+    assert(store.keptSchema.contains(spark.read.parquet(s"$dir/msgs").schema))
+    val (rows, jobs) = JobCount(spark)(store.all())
+    assert(jobs == 0, s"the first read after a seeding save ran $jobs Spark jobs")
+    assert(rows.select("uuid", "state", "attempt").as[(String, String, Long)].collect().toSet ==
+      Set(("a", "pending", 0L), ("b", "pending", 0L), ("c", "pending", 0L), ("d", "pending", 0L)))
+    // a save into a store that already has base data keeps the kept schema
+    val seeded = store.keptSchema
+    store.save(batch.withColumn("uuid", concat(col("uuid"), lit("2"))))
+    assert(store.keptSchema == seeded && store.total() == 8)
+  }
+
+  test("MessageStore (parquet): a first batch whose every ts is null reads the same rows before and after a dated batch") {
+    val dir = Files.createTempDirectory("graft_store_nullday").toString
+    val store = new MessageStore(spark, s"$dir/msgs")
+    val undated = msgs.filter(col("uuid") < "c").withColumn("ts", lit(null).cast("timestamp"))
+    store.save(undated)
+    // Spark would infer `day: void` for this store; the rows do not carry day
+    def rows() = store.all().select(col("uuid"), col("ts").cast("string"), col("state"))
+      .as[(String, String, String)].collect().toSet
+    assert(rows() == Set(("a", null, "pending"), ("b", null, "pending")))
+    store.save(msgs.filter(col("uuid") >= "c"))
+    assert(rows() == Set(("a", null, "pending"), ("b", null, "pending"),
+      ("c", "2024-01-03 10:00:00", "pending"), ("d", "2024-01-04 10:00:00", "pending")))
+    store.changeMessageState("a", "processed")
+    assert(store.search(Search(startDt = Some("2024-01-03 12:00:00")))
+      .select("uuid").as[String].collect().toSeq == Seq("d"))
+    assert(rows().contains(("a", null, "processed")))
+  }
+
   test("MessageStore (parquet): a hidden temp file left by a crashed append is ignored") {
     val dir = Files.createTempDirectory("graft_store_tmplog").toString
     val store = new MessageStore(spark, s"$dir/msgs", autoCompactMutationFiles = 0)
