@@ -6,13 +6,30 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
 
   /** Settings every graft session needs; callable on any builder so the
-    * driver-owned mains (Verify/Bench) and tests share one definition. */
+    * driver-owned mains (Verify/Bench) and tests share one definition.
+    *
+    * `file:` paths go through graft's local filesystem
+    * ([[graft.store.GraftLocalFileSystem]] for `FileSystem`,
+    * [[graft.store.GraftLocalFs]] for `FileContext`): without the native
+    * Hadoop library, Hadoop's own runs `chmod` in a child process for
+    * every file and directory it creates and `readlink` on every
+    * FileContext rename, which made each store write and each streaming
+    * checkpoint log write cost several ms of forks. Both are set as
+    * `spark.hadoop.*` JVM properties only if absent, which a `SparkConf`
+    * reads under its explicit settings: a user's `spark.hadoop.fs.file.impl`
+    * or `spark.hadoop.fs.AbstractFileSystem.file.impl` (builder option,
+    * `--conf`, or `-D`) wins. Hadoop caches `FileSystem` instances per
+    * JVM, so this holds from the first session built with it. */
   def configure(b: SparkSession.Builder): SparkSession.Builder = {
     // TCP_NODELAY for [[graft.net.HttpEndpoint]]'s kept-alive replies. The
     // JDK reads this JVM-wide property once, at the process's first
     // `HttpServer.create`, so it is set where the session is built, before
     // any JDK server can exist; a user's setting wins.
     System.getProperties.putIfAbsent("sun.net.httpserver.nodelay", "true")
+    System.getProperties.putIfAbsent("spark.hadoop.fs.file.impl",
+      classOf[graft.store.GraftLocalFileSystem].getName)
+    System.getProperties.putIfAbsent("spark.hadoop.fs.AbstractFileSystem.file.impl",
+      classOf[graft.store.GraftLocalFs].getName)
     b.config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       // events.parquet carries TIMESTAMP(NANOS); read as long (see Tables)

@@ -353,8 +353,11 @@ private[graft] object LocalSolve {
   /** Round-synchronous Bellman–Ford with frontier pruning —
     * [[Graph.shortestPaths]] verbatim including the maxRounds cap (the
     * capped result is "min over paths with ≤ maxRounds edges", exactly
-    * the distributed loop's documented semantics). Input: (0, src, dst,
-    * w) edges, (1, id, 0, 0) seeds. */
+    * the distributed loop's documented semantics). Each round relaxes
+    * from the frontier's distances as they stood when the round began,
+    * as the distributed join does; reading `dist` live would let one
+    * round follow a chain of edges. Input: (0, src, dst, w) edges,
+    * (1, id, 0, 0) seeds. */
   def bellmanFord(tagged: DataFrame, maxRounds: Int): DataFrame = {
     val sp = tagged.sparkSession
     import sp.implicits._
@@ -377,8 +380,7 @@ private[graft] object LocalSolve {
       while (r < maxRounds && frontier.nonEmpty) {
         r += 1
         val improved = new mutable.LongMap[Unit]()
-        frontier.foreach { u =>
-          val du = dist(u)
+        frontier.map(u => (u, dist(u))).foreach { case (u, du) =>
           adj.get(u).foreach(_.foreach { case (v, w) =>
             val cand = du + w
             if (!dist.contains(v) || cand < dist(v)) {

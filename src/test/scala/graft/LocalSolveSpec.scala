@@ -72,6 +72,20 @@ class LocalSolveSpec extends SparkSpec {
     assert(l == d && l.nonEmpty)
   }
 
+  test("shortestPaths: local == distributed when maxRounds stops before convergence") {
+    val rnd = new scala.util.Random(7)
+    val w = Seq.fill(600)((rnd.nextInt(200).toLong, rnd.nextInt(200).toLong))
+      .toDF("src", "dst")
+      .select($"src", $"dst", (($"src" * 7 + $"dst") % 5 + 1).as("w"))
+    val seeds = Seq(1L, 2L, 3L).toDF("id")
+    val (l, d) = bothPaths(graft.graph.Graph.shortestPaths(seeds, w, maxRounds = 4))
+    assert(l == d && l.nonEmpty)
+    // the cap really cuts: more rounds still lower some distances
+    val converged = graft.graph.Graph.shortestPaths(seeds, w, maxRounds = 50)
+      .collect().map(_.toString).toSet
+    assert(converged != l)
+  }
+
   test("kCore: local == distributed") {
     // undirected clique + pendant chain
     val und = (Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
