@@ -18,8 +18,9 @@ object GraftSession {
     * `spark.hadoop.*` JVM properties only if absent, which a `SparkConf`
     * reads under its explicit settings: a user's `spark.hadoop.fs.file.impl`
     * or `spark.hadoop.fs.AbstractFileSystem.file.impl` (builder option,
-    * `--conf`, or `-D`) wins. Hadoop caches `FileSystem` instances per
-    * JVM, so this holds from the first session built with it. */
+    * `--conf`, or `-D`) wins. Hadoop keeps one cached `FileSystem` per
+    * scheme and user in a JVM, so a `file:` filesystem made before the
+    * first graft session is built keeps Hadoop's class. */
   def configure(b: SparkSession.Builder): SparkSession.Builder = {
     // TCP_NODELAY for [[graft.net.HttpEndpoint]]'s kept-alive replies. The
     // JDK reads this JVM-wide property once, at the process's first
