@@ -1424,8 +1424,7 @@ object DedupQueries {
         .select(col("vec_id"), col("embedding"))
       val graphs = Ann.nnDescent(sub, "vec_id", "embedding",
         k = 5, rounds = 2, nlist = 8)
-      val exact = Ann.knnJoinExact(sub, sub, "vec_id", "embedding", 5,
-          localSolve = true) // feeds a checkpoint: the one-task kernel wins
+      val exact = Ann.knnJoinExact(sub, sub, "vec_id", "embedding", 5)
         .select(col("probe_id").as("src"), col("id").as("dst"))
         .localCheckpoint(true)
       val rows = graphs.zipWithIndex.map { case (g, r) =>

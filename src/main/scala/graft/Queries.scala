@@ -4355,38 +4355,25 @@ object Queries {
         .select(col("l_partkey").as("p"), col("o_custkey").as("c")).distinct()
       // pinned: feeds the wedge join (twice via und), the anti join and
       // the degree table
-      val (e, nE) = graft.ops.Materialize.counted(buyers.as("b1")
+      val e = buyers.as("b1")
         .join(buyers.as("b2"), col("b1.p") === col("b2.p") && col("b1.c") < col("b2.c"))
-        .select(col("b1.c").as("a"), col("b2.c").as("b")).distinct())
-      // below-threshold fast path (round 19, LocalSolve): wedge counts,
-      // edge anti-filter and the fl4 jaccard in one task — identical
-      // arithmetic, same (cn ≥ 3) cut. TWO-stage gate because wedge
-      // volume is Σdeg², which an edge cap alone does not bound (a hub
-      // with 2¹⁸ neighbors would OOM the one task): the edge count cap
-      // first, then one cheap degree-census agg over the SAME checkpoint
-      // bounding the actual wedge volume.
-      if (graft.graph.LocalSolve.fits(nE, 1L << 18) &&
-          e.select(col("a").as("n")).unionAll(e.select(col("b").as("n")))
-            .groupBy(col("n")).agg(count(lit(1)).as("d"))
-            .agg(sum(col("d") * col("d"))).head.getLong(0) <= (1L << 24))
-        graft.graph.LocalSolve.linkPredictLocal(e, minCn = 3L)
-      else {
-        val und = e.unionAll(e.select(col("b").as("a"), col("a").as("b")))
-        val deg = und.groupBy(col("a").as("n")).agg(count(lit(1)).as("d"))
-        val wedge = und.as("u1")
-          .join(und.as("u2"), col("u1.a") === col("u2.a") && col("u1.b") < col("u2.b"))
-          .groupBy(col("u1.b").as("x"), col("u2.b").as("y"))
-          .agg(count(lit(1)).as("cn"))
-        val nonedge = wedge
-          .join(e, col("x") === col("a") && col("y") === col("b"), "left_anti")
-          .filter(col("cn") >= 3)
-        nonedge
-          .join(deg.select(col("n").as("x"), col("d").as("dx")), "x")
-          .join(deg.select(col("n").as("y"), col("d").as("dy")), "y")
-          .select(col("x"), col("y"), col("cn"),
-            fl4(col("cn").cast("double")
-              / (col("dx") + col("dy") - col("cn")).cast("double")).as("jaccard"))
-      }
+        .select(col("b1.c").as("a"), col("b2.c").as("b")).distinct()
+        .localCheckpoint(true)
+      val und = e.unionAll(e.select(col("b").as("a"), col("a").as("b")))
+      val deg = und.groupBy(col("a").as("n")).agg(count(lit(1)).as("d"))
+      val wedge = und.as("u1")
+        .join(und.as("u2"), col("u1.a") === col("u2.a") && col("u1.b") < col("u2.b"))
+        .groupBy(col("u1.b").as("x"), col("u2.b").as("y"))
+        .agg(count(lit(1)).as("cn"))
+      val nonedge = wedge
+        .join(e, col("x") === col("a") && col("y") === col("b"), "left_anti")
+        .filter(col("cn") >= 3)
+      nonedge
+        .join(deg.select(col("n").as("x"), col("d").as("dx")), "x")
+        .join(deg.select(col("n").as("y"), col("d").as("dy")), "y")
+        .select(col("x"), col("y"), col("cn"),
+          fl4(col("cn").cast("double")
+            / (col("dx") + col("dy") - col("cn")).cast("double")).as("jaccard"))
     },
     Some("""WITH buyers AS (
               SELECT DISTINCT l.l_partkey AS p, o.o_custkey AS c

@@ -73,7 +73,7 @@ object SortedNeighborhood {
       val stringKeys = sortCols.forall(c =>
         df.schema(c).dataType == org.apache.spark.sql.types.StringType)
       if (stringKeys && df.schema(idCol).dataType == LongType &&
-          LocalSolve.fitsBounded(df.select(col(idCol)), 1L << 20).isDefined) {
+          LocalSolve.fitsBounded(df.select(col(idCol)), 1L << 20)) {
         return LocalSolve.sortedPairsLocal(
           df.select(col(idCol), array(sortCols.map(col): _*).as("ks")),
           window)

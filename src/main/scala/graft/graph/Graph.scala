@@ -813,23 +813,9 @@ object Graph {
       nodes: DataFrame, seeds: DataFrame, edges: DataFrame,
       iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be ≥ 1, got $iters")
-    val (e, nE) = Materialize.counted(edges.toDF("src", "dst"))
-    val (n, nNodes) = Materialize.counted(nodes.toDF("id"))
-    val (sd, nSeeds) = Materialize.counted(seeds.toDF("id", "label"))
-    // below-threshold fast path (round 19, LocalSolve): all fixed
-    // rounds in one task — identical vote/tiebreak/clamp semantics.
-    if (LocalSolve.allLong(e, "src", "dst") && LocalSolve.allLong(n, "id") &&
-        LocalSolve.allLong(sd, "id", "label") &&
-        LocalSolve.fits(nE) && LocalSolve.fits(nNodes) &&
-        LocalSolve.fits(nSeeds)) {
-      return LocalSolve.labelProp(
-        e.select(lit(0).as("t"), col("src").as("x"), col("dst").as("y"))
-          .unionByName(sd.select(lit(1).as("t"), col("id").as("x"),
-            col("label").as("y")))
-          .unionByName(n.select(lit(2).as("t"), col("id").as("x"),
-            lit(0L).as("y"))),
-        iters)
-    }
+    val e = edges.toDF("src", "dst").localCheckpoint(true)
+    val n = nodes.toDF("id").localCheckpoint(true)
+    val sd = seeds.toDF("id", "label").localCheckpoint(true)
     var lab = sd
     for (_ <- 1 to iters) {
       val votes = e
@@ -853,18 +839,6 @@ object Graph {
     lab
   }
 
-  /** Personalized PageRank (Haveliwala 2002): PageRank whose teleport
-    * mass returns to a SEED set instead of the uniform vector —
-    * pr'(v) = (1−d)·restart(v) + d·Σ pr(u)/outdeg(u), restart = 1/|S|
-    * on seeds (restricted to graph nodes), 0 elsewhere, pr₀ = restart.
-    * The "authority relative to a trusted set" ranking of seed-based
-    * curation (topic-sensitive trust, TrustRank-style spam demotion).
-    *
-    * Same per-iteration shape as [[pageRank]] — one uniform-key shuffle
-    * (edges ⋈ ranks on src), 1/outdeg weights computed once, periodic
-    * checkpoints — plus a restart relation built once; nothing
-    * node-count-sized at the driver (the only scalar is |S|). Like
-    * [[pageRank]], every node needs an out-edge (use [[undirected]]). */
   /** Weighted edge relation for the rank-iteration family, built in ONE
     * pass and ONE materialization: `w = 1/outdeg(src)` via a src-keyed
     * window (count and the `first`-row flag share the same shuffle) over
@@ -879,10 +853,11 @@ object Graph {
     * on src alone, and the node set it fed is a map-side
     * partial-aggregated distinct over the checkpoint (node-count-sized
     * shuffle, cheaper than the wider sort at every scale). */
-  private def weightedEdges(edges: DataFrame): (DataFrame, Long) = {
+  private def weightedEdges(edges: DataFrame): DataFrame = {
     val ws = org.apache.spark.sql.expressions.Window.partitionBy(col("src"))
-    Materialize.counted(edges.toDF("src", "dst")
-      .withColumn("w", lit(1.0) / count(lit(1)).over(ws)))
+    edges.toDF("src", "dst")
+      .withColumn("w", lit(1.0) / count(lit(1)).over(ws))
+      .localCheckpoint(true)
   }
 
   /** Node set of a [[weightedEdges]] relation: distinct srcs (every node
@@ -891,6 +866,18 @@ object Graph {
   private def rankNodes(ew: DataFrame): DataFrame =
     ew.select(col("src").as("nid")).distinct()
 
+  /** Personalized PageRank (Haveliwala 2002): PageRank whose teleport
+    * mass returns to a SEED set instead of the uniform vector —
+    * pr'(v) = (1−d)·restart(v) + d·Σ pr(u)/outdeg(u), restart = 1/|S|
+    * on seeds (restricted to graph nodes), 0 elsewhere, pr₀ = restart.
+    * The "authority relative to a trusted set" ranking of seed-based
+    * curation (topic-sensitive trust, TrustRank-style spam demotion).
+    *
+    * Same per-iteration shape as [[pageRank]] — one uniform-key shuffle
+    * (edges ⋈ ranks on src), 1/outdeg weights computed once, periodic
+    * checkpoints — plus a restart relation built once; nothing
+    * node-count-sized at the driver (the only scalar is |S|). Like
+    * [[pageRank]], every node needs an out-edge (use [[undirected]]). */
   def personalizedPageRank(
       edges: DataFrame,
       seeds: DataFrame,
@@ -898,22 +885,12 @@ object Graph {
       damping: Double = 0.85,
       checkpointEvery: Int = 4): DataFrame = {
     require(iters >= 1, "need at least one iteration")
-    val (ew, nEdges) = weightedEdges(edges)
+    val ew = weightedEdges(edges)
     val nodes = rankNodes(ew)
     // seeds outside the graph carry no mass and don't dilute the rest
     val (sd, nSeeds) = Materialize.counted(seeds.toDF("id").distinct()
       .join(nodes, col("id") === col("nid"), "left_semi"))
     require(nSeeds > 0, "no seed is a graph node — restart vector undefined")
-    // below-threshold fast path (round 19, LocalSolve): all power
-    // iterations in one task — see [[pageRank]]'s gate for the fixed
-    // accumulation order / caller-rounding rationale.
-    if (LocalSolve.allLong(ew, "src", "dst") && LocalSolve.fits(nEdges))
-      return LocalSolve.pprLocal(
-        ew.select(lit(0).as("t"), col("src").as("x"), col("dst").as("y"),
-            col("w"))
-          .unionByName(sd.select(lit(1).as("t"), col("id").as("x"),
-            lit(0L).as("y"), lit(0.0).as("w"))),
-        nSeeds, iters, damping)
     val restart = nodes
       .join(sd.select(col("id"), lit(1).as("isSeed")),
         col("nid") === col("id"), "left")
@@ -1356,15 +1333,7 @@ object Graph {
       damping: Double = 0.85,
       checkpointEvery: Int = 4): DataFrame = {
     require(iters >= 1, "need at least one iteration")
-    val (ew, nEdges) = weightedEdges(edges)
-    // below-threshold fast path (round 19, LocalSolve): all power
-    // iterations in one task. Per-dst contributions accumulate in a
-    // FIXED (dst, src) order — within float-ulp of the distributed
-    // partial aggregation's partition-dependent order, absorbed by the
-    // r4 rounding every caller applies (the same contract the
-    // distributed path's own run-to-run variance already rides on).
-    if (LocalSolve.allLong(ew, "src", "dst") && LocalSolve.fits(nEdges))
-      return LocalSolve.pageRankLocal(ew, iters, damping)
+    val ew = weightedEdges(edges)
     // node-count-sized; read twice per round. Every node has an out-edge,
     // so src carries all nodes
     val (nodes, n) = Materialize.counted(rankNodes(ew))

@@ -32,14 +32,22 @@ import scala.collection.mutable
   * semantics EXACTLY — same round structure, same round budgets and
   * [[IllegalStateException]] non-convergence contracts, same integer
   * arithmetic (the fixpoints were already designed integer-exact for
-  * oracle parity, so bit-identical results are provable, and
-  * LocalSolveSpec re-verifies equality against the distributed path on
-  * every algorithm). Nothing is driver-sized: the kernel runs inside an
-  * executor task (`coalesce(1).mapPartitions`), and the output flows
+  * oracle parity, so bit-identical results are provable). LocalSolveSpec
+  * checks every kernel against its distributed path on a fixture, and
+  * the round-budgeted ones over 20 seeded random graphs with each budget
+  * cut below convergence. Nothing is driver-sized: the kernel runs inside
+  * an executor task (`coalesce(1).mapPartitions`), and the output flows
   * back as a DataFrame into the same downstream joins.
   *
-  * Gating: one threshold for every kernel of the tier (graph, text, kNN,
-  * density, suffix arrays), `spark.graft.graph.localSolveEdges` (default
+  * A kernel is kept only where a measurement says it pays: ≥ 1.3× with
+  * the tier on vs off, at sf0.1 or at sf1. PageRank, personalized
+  * PageRank, label propagation, the exact kNN join and link prediction
+  * have no kernel: theirs measured 0.74–1.01× at sf0.1 and did not engage
+  * or did not win at sf1, so those operators run distributed only.
+  *
+  * Gating: one threshold for every kernel of the tier (graph fixpoints
+  * and listings, text pairs, vector search, density, suffix arrays),
+  * `spark.graft.graph.localSolveEdges` (default
   * 4 194 304 ≈ one task's comfortable working set of (long, long) pairs;
   * 0 disables the tier — the distributed paths are untouched and remain
   * the ≥-threshold route). Each gate is the job-free predicate [[fits]]
@@ -569,56 +577,6 @@ private[graft] object LocalSolve {
       }
       nodes.keysIterator.map(n => (n, ai(n), hi(n)))
     }.toDF("id", "a", "h").transform(eager)
-  }
-
-  // ---------------------------------------------------- labelPropagate
-
-  /** Deterministic hard-label propagation — [[Graph.labelPropagate]]
-    * verbatim: per round votes flow src ← dst, winner = max (cnt,
-    * −label), label = coalesce(seed, win, previous), restricted to the
-    * node universe from round 1 on (round 0 state = raw seeds). Input:
-    * (0, src, dst) edges, (1, id, label) seeds, (2, id, 0) nodes.
-    * Output (id, label) for labeled nodes. */
-  def labelProp(tagged: DataFrame, iters: Int): DataFrame = {
-    val sp = tagged.sparkSession
-    import sp.implicits._
-    oneTask(tagged.as[(Int, Long, Long)]) { it =>
-      val rows = it.toArray
-      val edges = rows.collect { case (0, s, d) => (s, d) }
-      val seeds = new mutable.LongMap[Long]()
-      rows.foreach { case (t, i2, l) => if (t == 1) seeds(i2) = l }
-      val nodes = rows.collect { case (2, i2, _) => i2 }
-      var lab: mutable.LongMap[Long] = seeds.clone()
-      var round = 0
-      while (round < iters) {
-        // votes: dst's label votes for src
-        val votes = new mutable.HashMap[(Long, Long), Long]()
-        edges.foreach { case (s, d) =>
-          lab.get(d).foreach { l =>
-            votes((s, l)) = votes.getOrElse((s, l), 0L) + 1L
-          }
-        }
-        // win per src: max count, tie → smallest label
-        val win = new mutable.LongMap[(Long, Long)]() // src -> (cnt, label)
-        votes.foreach { case ((s, l), c) =>
-          win.get(s) match {
-            case Some((bc, bl)) =>
-              if (c > bc || (c == bc && l < bl)) win(s) = (c, l)
-            case None => win(s) = (c, l)
-          }
-        }
-        val next = new mutable.LongMap[Long]()
-        nodes.foreach { id =>
-          val v = seeds.get(id)
-            .orElse(win.get(id).map(_._2))
-            .orElse(lab.get(id))
-          v.foreach(next(id) = _)
-        }
-        lab = next
-        round += 1
-      }
-      lab.iterator.map { case (id, l) => (id, l) }
-    }.toDF("id", "label").transform(eager)
   }
 
   // ---------------------------------------------------------- Luby MIS
@@ -1349,13 +1307,11 @@ private[graft] object LocalSolve {
 
   /** The gate for an input nobody pins: a LIMIT-bounded count scanning at
     * most cap+1 rows, so it never pays a full pass over a production-sized
-    * relation (the knnJoinExact corpus can be the whole corpus). Returns
-    * the exact count when [[fits]] passes it with `cap`, None otherwise. */
-  def fitsBounded(df: DataFrame, cap: Long): Option[Long] = {
-    if (threshold(df.sparkSession) <= 0L) return None
+    * relation (a sorted-neighborhood input can be the whole corpus). True
+    * when [[fits]] passes that count with `cap`. */
+  def fitsBounded(df: DataFrame, cap: Long): Boolean = {
     val c = math.min(cap, threshold(df.sparkSession))
-    val n = df.limit((c + 1).toInt).count()
-    if (n <= c) Some(n) else None
+    c > 0L && df.limit((c + 1).toInt).count() <= c
   }
 
   /** The exact cosine — [[graft.plans.CosineSimilarity]]'s index-ordered
@@ -1373,12 +1329,6 @@ private[graft] object LocalSolve {
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  /** Spark's Round(double, 4) — BigDecimal HALF_UP, the same library
-    * call the catalyst expression makes. */
-  private def round4(d: Double): Double =
-    if (d.isNaN || d.isInfinite) d
-    else BigDecimal(d).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   /** TopKByScore's RETENTION order — the heap keeps the k largest by
     * (score, −id) under java.lang.Double.compare total-order semantics
     * (NaN greatest, −0.0 < 0.0), which is what tuple Orderings give. */
@@ -1392,41 +1342,6 @@ private[graft] object LocalSolve {
       cand: mutable.ArrayBuffer[(Double, Long)], k: Int): Array[(Double, Long)] =
     cand.sorted(topkSelOrd.reverse).take(k).toArray
       .sortBy { case (s, i) => (-s, i) }
-
-  /** Exact k-NN join — [[graft.sim.Ann.knnJoinExact]] verbatim in one
-    * task: per probe ID (duplicate probe rows merge into one group, as
-    * groupBy does) the k best corpus vectors under TopKByScore's exact
-    * retention + output orders, self-pairs excluded, output
-    * (probe_id, id, round(cos, 4), rk). Input: (0, id, vec) corpus rows,
-    * (1, id, vec) probe rows. */
-  def knnTopkLocal(tagged: DataFrame, k: Int): DataFrame = {
-    val sp = tagged.sparkSession
-    import sp.implicits._
-    oneTask(tagged.as[(Int, Long, Array[Double])]) { it =>
-      val corpus = new mutable.ArrayBuffer[(Long, Array[Double])]()
-      val probes = new mutable.LongMap[mutable.ArrayBuffer[Array[Double]]]()
-      val order = new mutable.ArrayBuffer[Long]()
-      it.foreach { r =>
-        if (r._1 == 0) corpus += ((r._2, r._3))
-        else {
-          if (!probes.contains(r._2)) order += r._2
-          probes.getOrElseUpdate(r._2,
-            new mutable.ArrayBuffer[Array[Double]]()) += r._3
-        }
-      }
-      order.iterator.flatMap { pid =>
-        val cand = new mutable.ArrayBuffer[(Double, Long)]()
-        probes(pid).foreach { pv =>
-          corpus.foreach { case (cid, cv) =>
-            if (cid != pid) cand += ((cos(cv, pv), cid))
-          }
-        }
-        topkSorted(cand, k).iterator.zipWithIndex.map { case ((s, cid), r) =>
-          (pid, cid, round4(s), (r + 1).toLong)
-        }
-      }
-    }.toDF("probe_id", "id", "cosine", "rk").transform(eager)
-  }
 
   /** GraphSAGE mean layer — [[graft.sim.Gnn.sageMeanLayer]] verbatim:
     * per-dim 1e-6 fixed-point self vectors, integer neighbor sums,
@@ -1564,51 +1479,6 @@ private[graft] object LocalSolve {
     }.toDF("n", "degree", "tri_count", "coef").transform(eager)
   }
 
-  // ----------------------------------------------- link prediction (CN)
-
-  /** Neighborhood-overlap link prediction — the q_link_predict pipeline
-    * verbatim over a canonical (a < b, distinct) edge set: wedge pairs
-    * (x < y sharing a neighbor) with common-neighbor counts, existing
-    * edges anti-joined away, cn ≥ minCn, jaccard = fl4(cn/(dx+dy−cn))
-    * in the identical double arithmetic (fl4 = floor(v·10000+0.5)/10000).
-    * Output (x, y, cn, jaccard). */
-  def linkPredictLocal(canonicalEdges: DataFrame, minCn: Long): DataFrame = {
-    val sp = canonicalEdges.sparkSession
-    import sp.implicits._
-    oneTask(canonicalEdges.select("a", "b").as[(Long, Long)]) { it =>
-      val es = it.toArray
-      val edgeSet = new mutable.HashSet[(Long, Long)]()
-      val adj = new mutable.LongMap[mutable.ArrayBuffer[Long]]()
-      es.foreach { case (a, b) =>
-        edgeSet += ((a, b))
-        adj.getOrElseUpdate(a, new mutable.ArrayBuffer[Long]()) += b
-        adj.getOrElseUpdate(b, new mutable.ArrayBuffer[Long]()) += a
-      }
-      val deg = new mutable.LongMap[Long]()
-      adj.foreachEntry((n, nb) => deg(n) = nb.length.toLong)
-      val cn = new mutable.HashMap[(Long, Long), Long]()
-      adj.foreachEntry { (_, nb) =>
-        val s = nb.sortInPlace()
-        var i = 0
-        while (i < s.length) {
-          var j = i + 1
-          while (j < s.length) {
-            val k = (s(i), s(j))
-            cn(k) = cn.getOrElse(k, 0L) + 1L
-            j += 1
-          }
-          i += 1
-        }
-      }
-      cn.iterator.collect {
-        case ((x, y), c) if c >= minCn && !edgeSet.contains((x, y)) =>
-          val denom = deg(x) + deg(y) - c
-          val jac = math.floor(c.toDouble / denom.toDouble * 10000 + 0.5) / 10000
-          (x, y, c, jac)
-      }
-    }.toDF("x", "y", "cn", "jaccard").transform(eager)
-  }
-
   // ------------------------------------------------------------ DBSCAN
 
   /** Grid-cell-blocked exact DBSCAN — [[graft.sim.Density.dbscan]]
@@ -1717,140 +1587,5 @@ private[graft] object LocalSolve {
       }
       out.iterator
     }.toDF("id", "role", "cluster").transform(eager)
-  }
-
-  // ---------------------------------------------------------- PageRank
-
-  /** Power-iteration PageRank — [[Graph.pageRank]] semantics: pr₀ = 1/n,
-    * pr'(v) = (1−d)/n + d·Σ pr(u)·w(u→v). Per-dst contributions
-    * accumulate in (dst, src)-sorted order — a fixed order where the
-    * distributed partial aggregation's is partition-dependent; both land
-    * within float-ulp of each other, and every caller rounds (r4) at the
-    * output, which is the contract that already absorbs the distributed
-    * path's own run-to-run order variance. Input: (src, dst, w) weighted
-    * edges (every node has an out-edge). Output (id, pr). */
-  def pageRankLocal(ew: DataFrame, iters: Int, damping: Double): DataFrame = {
-    val sp = ew.sparkSession
-    import sp.implicits._
-    oneTask(ew.select("src", "dst", "w").as[(Long, Long, Double)]) { it =>
-      // dense-index decode (primitive arrays — the kernel must beat 32
-      // cores of distributed join+agg, so no boxed sorts, no per-edge
-      // hash ops in the iteration loop). Accumulation order is the
-      // checkpoint's row order — deterministic (the weighted relation is
-      // window-sorted per partition) and within float-ulp of the
-      // distributed partial aggregation's own order; callers round (r4).
-      val srcB = Array.newBuilder[Long]
-      val dstB = Array.newBuilder[Long]
-      val wB = Array.newBuilder[Double]
-      while (it.hasNext) {
-        val e = it.next(); srcB += e._1; dstB += e._2; wB += e._3
-      }
-      val srcs = srcB.result(); val dsts = dstB.result(); val ws = wB.result()
-      val m = srcs.length
-      val idx = new mutable.LongMap[Int]()
-      val ids = new mutable.ArrayBuffer[Long]()
-      var i = 0
-      while (i < m) {
-        val s = srcs(i)
-        if (!idx.contains(s)) { idx(s) = ids.length; ids += s }
-        i += 1
-      }
-      val n = ids.length
-      val si = new Array[Int](m)
-      val di = new Array[Int](m)
-      i = 0
-      while (i < m) {
-        si(i) = idx(srcs(i))
-        di(i) = idx.getOrElse(dsts(i), -1) // non-node dst: dropped (left join on nodes)
-        i += 1
-      }
-      val base = (1.0 - damping) / n
-      var pr = Array.fill(n)(1.0 / n)
-      var round = 0
-      while (round < iters) {
-        val contrib = new Array[Double](n)
-        i = 0
-        while (i < m) {
-          val d = di(i)
-          if (d >= 0) contrib(d) += pr(si(i)) * ws(i)
-          i += 1
-        }
-        val next = new Array[Double](n)
-        var v = 0
-        while (v < n) { next(v) = base + damping * contrib(v); v += 1 }
-        pr = next
-        round += 1
-      }
-      ids.iterator.zipWithIndex.map { case (id, j) => (id, pr(j)) }
-    }.toDF("id", "pr").transform(eager)
-  }
-
-  /** Personalized PageRank — [[Graph.personalizedPageRank]] semantics:
-    * restart = 1/|S| on seeds, 0 elsewhere; pr₀ = restart;
-    * pr'(v) = (1−d)·restart(v) + d·Σ pr(u)·w(u→v). Same fixed
-    * accumulation order and rounding rationale as [[pageRankLocal]].
-    * Input: (0, src, dst, w) weighted edges, (1, id, 0, 0) seed ids
-    * (already restricted to graph nodes, distinct); nSeeds passed in
-    * (the caller's require-checked scalar). Output (id, pr). */
-  def pprLocal(
-      tagged: DataFrame, nSeeds: Long, iters: Int,
-      damping: Double): DataFrame = {
-    val sp = tagged.sparkSession
-    import sp.implicits._
-    oneTask(tagged.as[(Int, Long, Long, Double)]) { it =>
-      // dense-index decode; see [[pageRankLocal]] for the accumulation-
-      // order rationale
-      val srcB = Array.newBuilder[Long]
-      val dstB = Array.newBuilder[Long]
-      val wB = Array.newBuilder[Double]
-      val seedB = Array.newBuilder[Long]
-      while (it.hasNext) {
-        val r = it.next()
-        if (r._1 == 0) { srcB += r._2; dstB += r._3; wB += r._4 }
-        else seedB += r._2
-      }
-      val srcs = srcB.result(); val dsts = dstB.result(); val ws = wB.result()
-      val m = srcs.length
-      val idx = new mutable.LongMap[Int]()
-      val ids = new mutable.ArrayBuffer[Long]()
-      var i = 0
-      while (i < m) {
-        val s = srcs(i)
-        if (!idx.contains(s)) { idx(s) = ids.length; ids += s }
-        i += 1
-      }
-      val n = ids.length
-      val si = new Array[Int](m)
-      val di = new Array[Int](m)
-      i = 0
-      while (i < m) {
-        si(i) = idx(srcs(i))
-        di(i) = idx.getOrElse(dsts(i), -1)
-        i += 1
-      }
-      val seedRst = 1.0 / nSeeds
-      val rst = new Array[Double](n)
-      seedB.result().foreach { s => idx.get(s).foreach(j => rst(j) = seedRst) }
-      var pr = rst.clone()
-      var round = 0
-      while (round < iters) {
-        val contrib = new Array[Double](n)
-        i = 0
-        while (i < m) {
-          val d = di(i)
-          if (d >= 0) contrib(d) += pr(si(i)) * ws(i)
-          i += 1
-        }
-        val next = new Array[Double](n)
-        var v = 0
-        while (v < n) {
-          next(v) = (1.0 - damping) * rst(v) + damping * contrib(v)
-          v += 1
-        }
-        pr = next
-        round += 1
-      }
-      ids.iterator.zipWithIndex.map { case (id, j) => (id, pr(j)) }
-    }.toDF("id", "pr").transform(eager)
   }
 }

@@ -269,56 +269,17 @@ object Ann {
     * that fit a broadcast (≲10⁵ vectors); beyond that use [[knnJoinIvf]].
     * Self-pairs (same id both sides) are excluded. Ties → smaller id.
     *
-    * `localSolve = true` (round 19) additionally gates a below-threshold
-    * one-task kernel with bit-identical results. It is OPT-IN because the
-    * gate + eager kernel materialization cost ~3 extra jobs per call:
-    * a win when the result feeds a long per-query pipeline (mutual-kNN →
-    * SAGE, the NN-Descent exact reference), a measured regression for
-    * evaluators that call this several times per query and otherwise
-    * defer everything into one lazy plan (q_mrl_recall read 1.44 s
-    * gated-on vs 0.51 s off on the same build). */
+    * It has no one-task LocalSolve kernel: one measured slower than this
+    * plan (q_mutual_knn 0.74× at sf0.1). Duplicate probe ids merge into
+    * one top-k group; a NaN cosine (zero vector) is retained as the
+    * greatest score and shown last. */
   def knnJoinExact(
       probes: DataFrame,
       corpus: DataFrame,
       idCol: String,
       vecCol: String,
-      k: Int,
-      localSolve: Boolean = false): DataFrame = {
+      k: Int): DataFrame = {
     import graft.plans.TopKByScore.topkByScore
-    // below-threshold fast path (round 19, LocalSolve): both sides small
-    // → all pair cosines + the per-probe k-heap in one task, identical
-    // index-ordered fold, (cos DESC, id ASC) order and HALF_UP rounding.
-    // The corpus gate is a LIMIT-bounded count (≤ cap+1 rows scanned), so
-    // a production-sized corpus never pays a counting pass.
-    if (localSolve &&
-        // long ids only (the sibling-gate convention): a non-long id
-        // must fall through to the type-generic distributed join, not
-        // crash the kernel decode or silently widen the output schema
-        probes.schema(idCol).dataType ==
-          org.apache.spark.sql.types.LongType &&
-        corpus.schema(idCol).dataType ==
-          org.apache.spark.sql.types.LongType) {
-      import graft.graph.LocalSolve
-      val cap = 1L << 18 // pair volume |p|·|c| is the kernel's work
-      val cs = corpus.select(col(idCol).as("id"),
-        col(vecCol).cast("array<double>").as("v"))
-      val ps = probes.select(col(idCol).as("id"),
-        col(vecCol).cast("array<double>").as("v"))
-      // gate counts ride a 1-column projection — limit's single-partition
-      // gather must not carry the vectors
-      (LocalSolve.fitsBounded(cs.select(col("id")), cap),
-        LocalSolve.fitsBounded(ps.select(col("id")), cap)) match {
-        case (Some(nc), Some(np)) if nc * np <= (1L << 23) =>
-          return LocalSolve.knnTopkLocal(
-            cs.select(org.apache.spark.sql.functions.lit(0).as("t"),
-                col("id"), col("v"))
-              .unionByName(ps.select(
-                org.apache.spark.sql.functions.lit(1).as("t"),
-                col("id"), col("v"))),
-            k)
-        case _ => ()
-      }
-    }
     val p = broadcast(
       probes.select(col(idCol).as("probe_id"), col(vecCol).as("pv")))
     // The |corpus|×|probes| pair work rides the CORPUS side's partitioning,
@@ -756,7 +717,7 @@ object Ann {
   }
 
   def mutualKnn(df: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
-    val knn = knnJoinExact(df, df, idCol, vecCol, k, localSolve = true)
+    val knn = knnJoinExact(df, df, idCol, vecCol, k)
       .localCheckpoint(true)
     knn.as("r1").join(knn.as("r2"),
         col("r1.probe_id") === col("r2.id")

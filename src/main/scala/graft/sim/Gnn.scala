@@ -80,8 +80,8 @@ object Gnn {
       // already known to be kernel-sized (edges ∝ nodes·k in the SAGE
       // composites, so a huge-corpus call exits on the node check
       // without touching the edge plan)
-      if (longIds && LocalSolve.fitsBounded(ns.select(col("id")), cap).isDefined
-          && LocalSolve.fitsBounded(e, cap).isDefined) {
+      if (longIds && LocalSolve.fitsBounded(ns.select(col("id")), cap)
+          && LocalSolve.fitsBounded(e, cap)) {
         return LocalSolve.sageMeanLocal(
           e.select(lit(0).as("t"), col("src").as("x"), col("dst").as("y"),
               lit(null).cast("array<double>").as("v"))

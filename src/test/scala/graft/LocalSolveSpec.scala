@@ -86,6 +86,109 @@ class LocalSolveSpec extends SparkSpec {
     assert(converged != l)
   }
 
+  // ------------------------------------------ randomized cut-budget parity
+
+  /** Seeded random directed graphs: non-contiguous and negative ids, and
+    * always a self-loop and a duplicated edge; `density` multiplies the
+    * edge count. */
+  private def randomEdges(seed: Int, density: Int = 1): Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(seed)
+    val ids = Seq.fill(5 + rnd.nextInt(4))(rnd.nextInt(41).toLong * 7 - 140).distinct
+    def pick() = ids(rnd.nextInt(ids.size))
+    val es = Seq.fill(density * (ids.size + rnd.nextInt(ids.size + 1)))((pick(), pick()))
+    es :+ ((ids.head, ids.head)) :+ es.head
+  }
+
+  private val graphSeeds = 1 to 20
+
+  /** Rows of `fn`, or the message of the IllegalStateException it throws. */
+  private def outcome(fn: => DataFrame): Either[String, Set[String]] =
+    try Right(fn.collect().map(_.toString).toSet)
+    catch { case e: IllegalStateException => Left(e.getMessage) }
+
+  /** Cuts `fn`'s budget from 1 up to convergence − 1 and asserts both
+    * paths agree at each cut. The local path alone finds convergence: the
+    * first budget whose outcome equals the one at `maxBudget`. Returns the
+    * number of budgets compared. */
+  private def cutBudgets(what: String, maxBudget: Int)(
+      fn: Int => DataFrame): Int = {
+    val key = "spark.graft.graph.localSolveEdges"
+    spark.conf.unset(key)
+    val settled = outcome(fn(maxBudget))
+    val cuts = (1 until maxBudget).iterator
+      .map(b => b -> outcome(fn(b))).takeWhile(_._2 != settled).toSeq
+    cuts.foreach { case (b, local) =>
+      spark.conf.set(key, "0")
+      val dist = try outcome(fn(b)) finally spark.conf.unset(key)
+      assert(local == dist, s"$what, budget $b: local $local != distributed $dist")
+    }
+    cuts.size
+  }
+
+  /** Every seeded graph through `check`, which returns each algorithm's
+    * [[cutBudgets]] count; every algorithm must be cut below convergence
+    * on some graph, or the property tests nothing the fixtures did not. */
+  private def overGraphs(check: (Int, Seq[(Long, Long)]) => Seq[Int]): Unit = {
+    val cuts = graphSeeds.map(seed => check(seed, randomEdges(seed))).transpose
+    assert(cuts.forall(_.sum > 0), s"an algorithm was never cut: $cuts")
+  }
+
+  test("random graphs: connectedComponents and reachability agree at every cut budget") {
+    overGraphs { (seed, es) =>
+      val e = es.toDF("src", "dst")
+      val nodes = (es.flatMap(p => Seq(p._1, p._2)) :+ 999L).distinct.toDF("id")
+      val seeds = Seq(es.head._1).toDF("id")
+      Seq(
+        cutBudgets(s"cc seed $seed", 12)(b =>
+          graft.graph.Graph.connectedComponents(nodes, e, maxIter = b)),
+        cutBudgets(s"reach seed $seed", 12)(b =>
+          graft.graph.Graph.reachability(seeds, e, maxRounds = b)))
+    }
+  }
+
+  test("random graphs: hopDistance and shortestPaths agree at every cut budget (tied weights)") {
+    overGraphs { (seed, es) =>
+      val e = es.toDF("src", "dst")
+      val w = e.select($"src", $"dst", (($"src" - $"dst").cast("long") % 2 + 2).as("w"))
+      val seeds = Seq(es.head._1, es.last._2).toDF("id")
+      Seq(
+        cutBudgets(s"hops seed $seed", 12)(b =>
+          graft.graph.Graph.hopDistance(seeds, e, maxHops = b)),
+        cutBudgets(s"sssp seed $seed", 12)(b =>
+          graft.graph.Graph.shortestPaths(seeds, w, maxRounds = b)))
+    }
+  }
+
+  test("random graphs: kCore and kTruss peels agree at every cut budget") {
+    overGraphs { (seed, es) =>
+      val e = es.toDF("src", "dst")
+      // a 3-truss peel always settles in one round (dropping triangle-free
+      // edges breaks no triangle), so the truss runs at k = 4 on a denser
+      // graph, where peels take several rounds
+      val dense = randomEdges(seed, density = 2).toDF("src", "dst")
+      Seq(
+        cutBudgets(s"kcore seed $seed", 12)(b =>
+          graft.graph.Graph.kCore(e, k = 2, maxIter = b)),
+        cutBudgets(s"ktruss seed $seed", 12)(b =>
+          graft.graph.Graph.kTruss(dense, k = 4, maxIter = b)))
+    }
+  }
+
+  test("random graphs: hits, louvain and harmonicCentrality agree at every cut budget") {
+    overGraphs { (seed, es) =>
+      val e = es.toDF("src", "dst")
+      val und = graft.graph.Graph.undirected(e)
+      val nodes = (es.flatMap(p => Seq(p._1, p._2)) :+ 999L).distinct.toDF("id")
+      Seq(
+        cutBudgets(s"hits seed $seed", 2)(b =>
+          graft.graph.Graph.hits(nodes, e, iters = b)),
+        cutBudgets(s"louvain seed $seed", 3)(b =>
+          graft.graph.Graph.louvain(und, rounds = b)),
+        cutBudgets(s"harmonic seed $seed", 6)(b =>
+          graft.graph.Graph.harmonicCentrality(und, maxHops = b)))
+    }
+  }
+
   test("kCore: local == distributed") {
     // undirected clique + pendant chain
     val und = (Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
@@ -110,14 +213,6 @@ class LocalSolveSpec extends SparkSpec {
 
   test("hits: local == distributed (fixed point, node universe)") {
     val (l, d) = bothPaths(graft.graph.Graph.hits(nodes, edges, iters = 3))
-    assert(l == d && l.nonEmpty)
-  }
-
-  test("labelPropagate: local == distributed (clamp + tiebreak)") {
-    val und = graft.graph.Graph.undirected(edges)
-    val seeds = Seq((1L, 100L), (7L, 200L)).toDF("id", "label")
-    val (l, d) = bothPaths(
-      graft.graph.Graph.labelPropagate(nodes, seeds, und, iters = 3))
     assert(l == d && l.nonEmpty)
   }
 
@@ -173,27 +268,6 @@ class LocalSolveSpec extends SparkSpec {
     assert(l == d && l.nonEmpty)
   }
 
-  test("pageRank: local == distributed (after the callers' r4 rounding)") {
-    // raw pr carries float-ulp sum-order differences BETWEEN ANY TWO
-    // runs of the distributed path itself (partial-agg order); compare
-    // after the rounding every registry caller applies
-    val und = graft.graph.Graph.undirected(edges)
-    val rounded = (df: DataFrame) => df.select($"id",
-      org.apache.spark.sql.functions.round($"pr" * 1000, 4).as("prx"))
-    val (l, d) = bothPaths(rounded(graft.graph.Graph.pageRank(und, iters = 3)))
-    assert(l == d && l.nonEmpty)
-  }
-
-  test("personalizedPageRank: local == distributed (r4-rounded)") {
-    val und = graft.graph.Graph.undirected(edges)
-    val rounded = (df: DataFrame) => df.select($"id",
-      org.apache.spark.sql.functions.round($"pr" * 1000, 4).as("prx"))
-    val (l, d) = bothPaths(rounded(
-      graft.graph.Graph.personalizedPageRank(und, Seq(1L, 9L).toDF("id"),
-        iters = 3)))
-    assert(l == d && l.nonEmpty)
-  }
-
   test("triangles: local == distributed (once-per-triangle bag)") {
     val und = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L),
       (4L, 5L), (5L, 6L), (4L, 6L), (5L, 7L)).toDF("src", "dst")
@@ -206,34 +280,6 @@ class LocalSolveSpec extends SparkSpec {
       (4L, 5L), (5L, 6L), (4L, 6L), (5L, 7L)).toDF("src", "dst")
     val (l, d) = bothPaths(graft.graph.Graph.clusteringCoefficient(und))
     assert(l == d && l.nonEmpty)
-  }
-
-  test("linkPredictLocal == the distributed wedge pipeline") {
-    import org.apache.spark.sql.functions._
-    // canonical edges with a 4-clique missing one edge → a (cn ≥ 2)
-    // candidate; threshold 2 keeps the tiny fixture productive
-    val e = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
-      (2L, 5L), (3L, 5L), (4L, 5L), (5L, 6L), (1L, 6L), (3L, 6L))
-      .toDF("a", "b").localCheckpoint()
-    val local = graft.graph.LocalSolve.linkPredictLocal(e, minCn = 2L)
-      .collect().map(_.toString).toSet
-    val und = e.unionAll(e.select(col("b").as("a"), col("a").as("b")))
-    val deg = und.groupBy(col("a").as("n")).agg(count(lit(1)).as("d"))
-    val wedge = und.as("u1")
-      .join(und.as("u2"), col("u1.a") === col("u2.a") && col("u1.b") < col("u2.b"))
-      .groupBy(col("u1.b").as("x"), col("u2.b").as("y"))
-      .agg(count(lit(1)).as("cn"))
-    val dist = wedge
-      .join(e, col("x") === col("a") && col("y") === col("b"), "left_anti")
-      .filter(col("cn") >= 2)
-      .join(deg.select(col("n").as("x"), col("d").as("dx")), "x")
-      .join(deg.select(col("n").as("y"), col("d").as("dy")), "y")
-      .select(col("x"), col("y"), col("cn"),
-        (floor(col("cn").cast("double")
-          / (col("dx") + col("dy") - col("cn")).cast("double") * 10000
-          + lit(0.5)) / 10000).as("jaccard"))
-      .collect().map(_.toString).toSet
-    assert(local == dist && local.nonEmpty)
   }
 
   test("sortedNeighborhood candidatePairs: local == distributed (utf8 order)") {
@@ -286,22 +332,10 @@ class LocalSolveSpec extends SparkSpec {
     assert(l == d && l.nonEmpty)
   }
 
-  test("knnJoinExact + mutualKnn: local == distributed (cos folds, ties)") {
-    val vecs = (1L to 12L).map { i =>
-      (i, Array.tabulate(8)(j => math.sin(i * 31 + j * 7) + 0.1 * j))
-    }.toDF("id", "v")
-    val (l, d) = bothPaths(
-      graft.sim.Ann.knnJoinExact(vecs, vecs, "id", "v", 3,
-        localSolve = true))
-    assert(l == d && l.nonEmpty)
-    val (lm, dm) = bothPaths(graft.sim.Ann.mutualKnn(vecs, "id", "v", 3))
-    assert(lm == dm && lm.nonEmpty)
-  }
-
   test("knnJoinExact: NaN cosines (zero vector) and duplicate probe ids") {
-    // a zero vector makes every cosine against it NaN — the kernel must
-    // replicate TopKByScore's total order (NaN retained as greatest,
-    // displayed last); duplicate probe rows must merge into ONE group
+    // a zero vector makes every cosine against it NaN: TopKByScore's total
+    // order retains NaN as the greatest score and displays it last;
+    // duplicate probe rows merge into ONE top-k group
     val corpus = ((1L to 6L).map { i =>
       (i, Array.tabulate(4)(j => math.cos(i * 7 + j)))
     } :+ (9L, Array.fill(4)(0.0))).toDF("id", "v")
@@ -310,10 +344,15 @@ class LocalSolveSpec extends SparkSpec {
       (1L, Array.tabulate(4)(j => math.cos(14 + j))), // duplicate id
       (9L, Array.fill(4)(0.0))) // zero-vector probe: all-NaN scores
       .toDF("id", "v")
-    val (l, d) = bothPaths(
-      graft.sim.Ann.knnJoinExact(probes, corpus, "id", "v", 3,
-        localSolve = true))
-    assert(l == d && l.nonEmpty)
+    val got = graft.sim.Ann.knnJoinExact(probes, corpus, "id", "v", 3)
+      .as[(Long, Long, Double, Long)].collect().map(_.toString).sorted.toSeq
+    // probe 1's group holds both rows' candidates: the two NaN pairs with
+    // corpus 9 outrank every real cosine and are shown after the one that
+    // is kept (corpus 2, the second row's own vector); probe 9's all-NaN
+    // ties break to the smaller ids; self-pairs are excluded
+    assert(got == Seq(
+      "(1,2,1.0,1)", "(1,9,NaN,2)", "(1,9,NaN,3)",
+      "(9,1,NaN,1)", "(9,2,NaN,2)", "(9,3,NaN,3)"), got)
   }
 
   test("sageMeanLayer: local == distributed (fixed-point + norm fold)") {
