@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Benchmark main — one JSON line for the driver.
   *
@@ -76,6 +78,12 @@ object Bench {
       }
     }
     var tStart = Vector.empty[(String, Long)]
+    // (name, classes compiled, compile ms) over each query's timed reps,
+    // read from Spark's JVM-wide codegen counters, which run no job: a
+    // warm query that still compiles had classes evicted from the
+    // generated-class cache (see GraftSession.configure) or generates
+    // new code on every run
+    var codegen = Vector.empty[(String, Long, Double)]
     var sentinel = Vector.empty[(Int, Long, Double)] // (entry index, epoch ms, sec)
     val sentinelFn = if (args.isEmpty) SparkEntry.queries.get("q1_agg") else None
     def runSentinel(idx: Int): Unit = sentinelFn.foreach { sf =>
@@ -105,7 +113,10 @@ object Bench {
       tStart :+= name -> System.currentTimeMillis()
       try {
         timeOnce(fn) // untimed warmup: JIT + codegen compile
+        val (c0, ns0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
         val times = (1 to reps).map(_ => timeOnce(fn)).sorted
+        codegen :+= ((name, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0,
+          (CodeGenerator.compileTime - ns0) / 1e6))
         name -> times(times.size / 2)
       } catch {
         case e: Throwable =>
@@ -330,8 +341,11 @@ object Bench {
     val gateSummary =
       s"""{"applies":$anchorsApply,"anchored":${gated.size},"over":${overNames.size},"over_names":${
         overNames.take(12).map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
+    val codegenMap = codegen.map { case (n, c, ms) =>
+      s"\"" + n + s"\":{\"compiles\":$c,\"compile_ms\":${fmt(ms)}}"
+    }.mkString("{", ",", "}")
     val fullLine =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${qmap(finalResults)},"failed":$fs,"reps":$reps,"healed":$healMap,"t_start_ms":$tsMap,"sentinel":$sentArr,"normalized":$normMap,"gate":$gateSummary,"streaming":$smap,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${qmap(finalResults)},"failed":$fs,"reps":$reps,"healed":$healMap,"t_start_ms":$tsMap,"sentinel":$sentArr,"normalized":$normMap,"gate":$gateSummary,"streaming":$smap,"codegen":$codegenMap,"sf":"$sfDir"}"""
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), fullLine + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] full dump write failed: ${e.getMessage}") }

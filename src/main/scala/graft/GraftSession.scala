@@ -20,7 +20,30 @@ object GraftSession {
     * or `spark.hadoop.fs.AbstractFileSystem.file.impl` (builder option,
     * `--conf`, or `-D`) wins. Hadoop keeps one cached `FileSystem` per
     * scheme and user in a JVM, so a `file:` filesystem made before the
-    * first graft session is built keeps Hadoop's class. */
+    * first graft session is built keeps Hadoop's class.
+    *
+    * Spark's generated-class cache gets 1,024 entries, also as a
+    * `spark.*` JVM property set only if absent, so a user's
+    * `spark.sql.codegen.cache.maxEntries` wins. The cache is one LRU per
+    * JVM, keyed on (context class loader, generated code), so a plan's
+    * whole-stage class is cached once for the driver's loader and once
+    * for the executors'. Working sets measured on one 4-core JVM:
+    *  - a perfbench `curate` pass (1,500 documents, 10 stages): 184–188
+    *    entries. At Spark's default of 100 every pass recompiled ~181
+    *    classes, 1.4–2.0 s of compile time in a 5–7 s pass; at 1,024 a
+    *    warm pass compiles 0–2;
+    *  - esb: 89 entries after its warm-up, plus 4 per cycle whose code
+    *    changes every cycle (they compile at any size);
+    *  - the largest sf0.1 battery query, q_bowtie: 92 (a warm rerun
+    *    recompiled 50 at 100);
+    *  - the whole sf0.1 battery: 2,086, and the spec suite: 8,701. The
+    *    cache need not hold either, since neither repeats a cycle (the
+    *    battery runs each query's repetitions back to back); at 1,024
+    *    the suite compiles 11,103 times.
+    * A resident entry costs ~21 KB of heap. `CodeGenerator` reads the
+    * size once, at the JVM's first code generation: a JVM that generated
+    * code before its first graft session was built keeps the size it
+    * read then, Spark's 100 unless set. */
   def configure(b: SparkSession.Builder): SparkSession.Builder = {
     // TCP_NODELAY for [[graft.net.HttpEndpoint]]'s kept-alive replies. The
     // JDK reads this JVM-wide property once, at the process's first
@@ -31,6 +54,7 @@ object GraftSession {
       classOf[graft.store.GraftLocalFileSystem].getName)
     System.getProperties.putIfAbsent("spark.hadoop.fs.AbstractFileSystem.file.impl",
       classOf[graft.store.GraftLocalFs].getName)
+    System.getProperties.putIfAbsent("spark.sql.codegen.cache.maxEntries", "1024")
     b.config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       // events.parquet carries TIMESTAMP(NANOS); read as long (see Tables)

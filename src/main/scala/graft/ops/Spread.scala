@@ -26,7 +26,9 @@ object Spread {
 
   def toSessionParallelism(df: DataFrame, keyCol: String): DataFrame = {
     val target = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    // getNumPartitions plans the RDD but runs no job
+    // getNumPartitions runs no job for a leaf or a pinned input, but
+    // under AQE `.rdd` finalizes the adaptive plan, which can run the
+    // shuffle stages below `df` as jobs of their own
     if (df.rdd.getNumPartitions >= target) df
     else df.repartition(target, col(keyCol))
   }

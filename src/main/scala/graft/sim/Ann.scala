@@ -832,7 +832,9 @@ object Ann {
         explode(nearestCentroids(col("pv"), index.centroids, nprobe)))
     // per-cell pair work rides the assigned (stream) side's split count —
     // a localCheckpointed local index is ONE partition; spread it (identity
-    // at production split counts; see knnJoinExact)
+    // at production split counts; see knnJoinExact). This assumes `pcells`
+    // is broadcast: otherwise the join reshuffles both sides on `cid` and
+    // the spread's exchange on `id` is pure overhead.
     pcells.join(
         graft.ops.Spread.toSessionParallelism(index.assigned, "id"), Seq("cid"))
       .filter(col("id") =!= col("probe_id"))
